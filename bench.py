@@ -22,9 +22,10 @@ cost is reported separately as ``warmup_sec``; the headline value sums
 only the timed steady-state runs — same protocol as the scaling
 evidence in BENCH.md (best-warm-run timing).
 
-Scaling evidence (north rule, two parallelism levels) is produced by
-``scripts/scaling_evidence.py`` which shells out to this file with
-``SPARK_GRAFT_CPUS=8`` and ``=32`` and writes BENCH.md.
+``SPARK_GRAFT_CPUS`` defaults to the host's core count. Scaling
+evidence (north rule, two parallelism levels) is produced by
+``scripts/scaling_evidence.py``, which runs the extraction at
+``local[1]`` and ``local[nproc]`` and writes BENCH.md.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
 SEED = 42
 
 # headline relational/training-data queries (from the registry)

@@ -29,8 +29,8 @@ Planted structure (all deterministic, xxhash64-keyed — no RNG):
 The chain is pure JVM (built-in functions only — no Python UDF
 workers), so pinning N executor cores + a 2-core driver allowance per
 level bounds the compute honestly (same protocol as
-scripts/scaling_evidence.py; this VM throttles above ~16-22 busy
-cores, so read the 8->32 pair against the measured hardware ceiling).
+scripts/scaling_evidence.py; read the level pair against the
+hardware ceiling that script measures).
 
 ``--adversarial`` (VERDICT r3 items 1/5) swaps in the skew-hostile
 corpus a crawl actually throws at a dedup pipeline:
@@ -51,7 +51,7 @@ The run asserts every stage's output rows stay O(corpus) and reports
 the constants (pairs/doc, sig rows vs distinct docs).
 
 Usage: python scripts/dedup_stress.py [n_docs] [levels...] [--adversarial]
-       (defaults: 1_000_000 docs, levels 8 32)
+       (defaults: 1_000_000 docs, levels nproc//4 and nproc)
 Appends/updates its BENCH.md section ("## Composed dedup-pipeline
 stress" / "## Adversarial skew stress") when run at >= 1M docs; prints
 one RESULT json line always.
@@ -69,7 +69,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _args = [a for a in sys.argv[1:] if a != "--adversarial"]
 ADVERSARIAL = "--adversarial" in sys.argv[1:]
 N_DOCS = int(_args[0]) if _args else 1_000_000
-LEVELS = [int(x) for x in _args[1:]] or [8, 32]
+NPROC = os.cpu_count() or 1
+LEVELS = [int(x) for x in _args[1:]] or [NPROC // 4 or 1, NPROC]
 VOCAB_N = 512
 CORPUS_VERSION = 1
 MEGA_EXACT = 10_000  # adversarial: ids [0, MEGA_EXACT) byte-identical
@@ -224,7 +225,7 @@ def main() -> None:
     root = f"/tmp/dedup_stress/v{CORPUS_VERSION}{tag}_n{N_DOCS}"
     docs_dir, bench_dir = f"{root}/docs", f"{root}/bench"
     if not os.path.exists(f"{docs_dir}/documents.parquet/_SUCCESS"):
-        spark = get_spark("gen", master="local[32]")
+        spark = get_spark("gen", master=f"local[{NPROC}]")
         synth_corpus(
             spark, N_DOCS, adversarial=ADVERSARIAL
         ).write.mode("overwrite").parquet(f"{docs_dir}/documents.parquet")
@@ -309,9 +310,8 @@ def main() -> None:
 - end-to-end: local[{lo}] {runs[lo]['wall_s']}s
   ({tp[lo]:,.0f} docs/s) -> local[{hi}] {runs[hi]['wall_s']}s
   ({tp[hi]:,.0f} docs/s); scaling efficiency **{eff}**
-  (read against the measured raw-CPU ceiling for 8->32 on this VM —
-  see the scaling-evidence table above; the VM throttles above ~16-22
-  busy cores).
+  (read against the measured raw-CPU ceiling for the same pair — see
+  the scaling-evidence table above).
 - final corpus: {runs[lo]['n_corpus']:,} docs; checksum-identical
   across levels (order-insensitive crc32 over (doc_id, md5(text)))."""
     if ADVERSARIAL:

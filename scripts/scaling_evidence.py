@@ -19,16 +19,15 @@ Honesty notes baked into the protocol:
   one pinned core; without the allowance a local[2] run delivers only
   1.26 kernel-cores because the JVM competes for the same 2 cores,
   which shows up as fake superlinearity between levels.
-- **Machine calibration.** This sandbox VM throttles above ~16-22
-  concurrent busy cores (raw busy-loop scaling measured below and
-  reported per pair); a local[8]->local[32] comparison conflates
-  engine scaling with hardware throttling. The primary evidence pair
-  is local[2] -> local[8] (honest hardware region); local[8] ->
-  local[32] is reported alongside the measured hardware ceiling.
-- **Steady state, interleaved epochs.** This VM shows heavy
-  time-varying CPU steal (raw busy-loop throughput varies ~±25% over
-  minutes), so levels are measured in interleaved epochs
-  (2, 8, 32, 2, 8, 32, ...), each epoch a fresh JVM doing one warmup
+- **Machine calibration.** The level pair is local[1] ->
+  local[nproc], derived from the host's core count. A VM may throttle
+  when many cores are busy, which a level comparison would read as
+  engine scaling, so the raw busy-loop throughput of the same pair is
+  measured and reported beside it as the hardware ceiling.
+- **Steady state, interleaved epochs.** Shared VMs show time-varying
+  CPU steal (raw busy-loop throughput varies ~±25% over minutes), so
+  levels are measured in interleaved epochs
+  (1, nproc, 1, nproc, ...), each epoch a fresh JVM doing one warmup
   run (JIT + Python worker spawn ~ cluster provisioning) plus timed
   runs; a level's figure is its best timed run across epochs. Cold
   numbers are reported too.
@@ -52,8 +51,8 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
-PRIMARY = (2, 8)
-SECONDARY = (8, 32)
+NPROC = os.cpu_count() or 1
+PAIR = (1, NPROC)
 
 RUN_SNIPPET = r"""
 import json, sys, time
@@ -134,7 +133,7 @@ def main() -> None:
 
     corpus = f"/tmp/spark_graft_corpus/v{CORPUS_VERSION}_n{N_DOCS}_seed42_p256"
     if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
-        spark = get_spark("gen", master="local[32]")
+        spark = get_spark("gen", master=f"local[{NPROC}]")
         # 256 output files: row-group granularity fine enough that every
         # parallelism level gets a balanced split (a 2.2MB file cannot
         # be split below file level).
@@ -143,7 +142,7 @@ def main() -> None:
         ).parquet(corpus)
         spark.stop()
 
-    levels = sorted(set(PRIMARY) | set(SECONDARY))
+    levels = sorted(set(PAIR))
     runs: dict[int, dict] = {}
     hw: dict[int, float] = {}
     for epoch in range(2):  # interleaved epochs vs time-varying steal
@@ -159,8 +158,7 @@ def main() -> None:
         return round((table[hi] / table[lo]) / (hi / lo), 3)
 
     spark_tp = {c: runs[c]["docs_per_sec"] for c in levels}
-    p_lo, p_hi = PRIMARY
-    s_lo, s_hi = SECONDARY
+    p_lo, p_hi = PAIR
     result = {
         "n_docs": N_DOCS,
         "runs": runs,
@@ -169,11 +167,6 @@ def main() -> None:
             "pair": f"local[{p_lo}] -> local[{p_hi}]",
             "spark_efficiency": eff(p_lo, p_hi, spark_tp),
             "hw_ceiling_efficiency": eff(p_lo, p_hi, hw),
-        },
-        "secondary": {
-            "pair": f"local[{s_lo}] -> local[{s_hi}]",
-            "spark_efficiency": eff(s_lo, s_hi, spark_tp),
-            "hw_ceiling_efficiency": eff(s_lo, s_hi, hw),
         },
         "byte_identical": True,
     }
@@ -186,7 +179,7 @@ def main() -> None:
         f"{round(hw[c], 1)} |"
         for c in levels
     )
-    pri, sec = result["primary"], result["secondary"]
+    pri = result["primary"]
     md = f"""# BENCH — extraction throughput + scaling evidence
 
 North-rule criterion: throughput scaling efficiency >= 0.8 between N
@@ -201,16 +194,9 @@ busy-loop hardware calibration alongside.
 |---|---|---|---|---|---|
 {rows}
 
-- **primary pair {pri["pair"]}**: spark efficiency = **{pri["spark_efficiency"]}**
+- **pair {pri["pair"]}**: spark efficiency = **{pri["spark_efficiency"]}**
   (hardware ceiling on this VM for the same pair: {pri["hw_ceiling_efficiency"]})
   -> {"PASS" if result["pass_ge_0.8"] else "FAIL"} vs the 0.8 bar
-- secondary pair {sec["pair"]}: spark efficiency = {sec["spark_efficiency"]}
-  against a same-run busy-loop ceiling of {sec["hw_ceiling_efficiency"]}.
-  The VM throttles above ~16-22 busy cores and the throttle is
-  time-varying: across rounds the measured 8->32 busy-loop ceiling has
-  ranged 0.70-0.93 and spark 0.53-0.69, so this pair is not a stable
-  basis for the criterion; the primary pair sits in the honest,
-  repeatable hardware region.
 - byte-identity across all levels: **verified** (order-insensitive
   crc32 checksum of (url, md5(extracted_text)) equal across runs:
   `{runs[levels[0]]["checksum"]}`); row-level identity additionally

@@ -1157,6 +1157,33 @@ def test_mp4_box_walk_metadata_exact(spark):
     assert fr["status"] == "no_codec"  # frames = demuxer territory
 
 
+def test_mp4_truncated_mvhd_is_a_typed_error():
+    """Fuzz: an mvhd too short for its version's duration field, as the
+    last box of the payload, raises ValueError (the typed boundary),
+    never struct.error or IndexError; at exactly the needed length the
+    duration parses."""
+    import struct as _struct
+
+    from win64_local_ocr_tool_spark.kernels.mp4meta import parse_mp4_meta
+
+    def box(typ, body):
+        return _struct.pack(">I", 8 + len(body)) + typ + body
+
+    def payload(mvhd_body):
+        return box(b"ftyp", b"isom" + bytes(4)) + box(
+            b"moov", box(b"mvhd", mvhd_body)
+        )
+
+    for version, need, fields in ((0, 20, ">IIII"), (1, 32, ">QQIQ")):
+        for n in range(need):
+            body = (bytes([version]) + bytes(need))[:n]
+            with pytest.raises(ValueError, match="truncated mvhd"):
+                parse_mp4_meta(payload(body))
+        body = bytes([version, 0, 0, 0])
+        body += _struct.pack(fields, 0, 0, 1000, 2500)
+        assert parse_mp4_meta(payload(body))["duration_ms"] == 2500
+
+
 def test_flac_streaminfo_metadata(spark):
     """FLAC STREAMINFO walk: exact bit-field unpacking (20-bit rate,
     3-bit channels, 5-bit depth, 36-bit sample count), duration math,

@@ -57,3 +57,68 @@ def test_error_rows_are_isolated(spark, golden):
     assert len(errs) == 2  # rows 499, 998
     assert (errs["extracted_text"] == "").all()
     assert (errs["lang"] == "und").all()
+
+
+def _grouped_run(spark, tmp_path, monkeypatch, name, **kw):
+    """``run_extraction`` over the golden corpus in 2 commit groups of
+    8 buckets, under its own Spark job group. Returns the plan of each
+    group's written frame, the number of Spark jobs and the output."""
+    from win64_local_ocr_tool_spark import pipeline
+
+    plans = []
+    write = pipeline.merge_by_key
+
+    def spy(df, target):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        write(df, target)
+
+    monkeypatch.setattr(pipeline, "merge_by_key", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        run_extraction(
+            spark, corpus_df(spark, N), out_dir=str(tmp_path / name),
+            lineage_dir=str(tmp_path / f"{name}_lin"), n_buckets=8,
+            commit_batches=2, **kw,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(name))
+    got = spark.read.parquet(str(tmp_path / name)).drop("partition_key")
+    return plans, n_jobs, got.toPandas()
+
+
+def test_probe_plans_no_chunk_branch_without_mega_pages(
+    spark, golden, tmp_path, monkeypatch
+):
+    """No page reaches the 8 MiB default: the size probe plans every
+    commit group as scan -> mapInPandas -> write (no Exchange), and a
+    group costs at most 3 Spark jobs, the probe included."""
+    plans, n_jobs, got = _grouped_run(
+        spark, tmp_path, monkeypatch, "probe_none"
+    )
+    assert len(plans) == 2
+    assert not any("Exchange" in p for p in plans)
+    assert n_jobs <= 3 * len(plans)
+    _assert_matches_golden(got, golden)
+
+
+def test_probe_plans_chunk_branch_only_for_the_mega_group(
+    spark, golden, tmp_path, monkeypatch
+):
+    """With the threshold at the largest page (row 997), only that
+    page's commit group plans the chunk branch."""
+    from win64_local_ocr_tool_spark.corpus import gen_row
+    from win64_local_ocr_tool_spark.lineage import with_partition_key
+
+    sizes = [len(gen_row(i)["html"]) for i in range(N)]
+    assert sizes.index(max(sizes)) == 997
+    assert sorted(sizes)[-2] < sizes[997]
+    key = with_partition_key(
+        spark.createDataFrame([(gen_row(997)["url"],)], "url string"), 8
+    ).first()["partition_key"]
+    plans, _, got = _grouped_run(
+        spark, tmp_path, monkeypatch, "probe_mega", mega_bytes=sizes[997]
+    )
+    assert ["Exchange" in p for p in plans] == [key < 4, key >= 4]
+    _assert_matches_golden(got, golden)

@@ -228,9 +228,9 @@ def test_straggler_resume_splits_planted_fat_partition(spark, tmp_path):
 
 def test_straggler_keys_from_lineage_report(spark, tmp_path):
     """The lineage-signal source of _straggler_keys: a prior epoch's
-    extract rows flag a partition at >= the skew ratio; with no
-    n_bytes column the input-size source is skipped and the lineage
-    report alone drives the flag."""
+    extract rows flag a partition at >= the skew ratio; with no probe
+    sizes the input-size source is skipped and the lineage report
+    alone drives the flag."""
     from win64_local_ocr_tool_spark.lineage import append_lineage
     from win64_local_ocr_tool_spark.pipeline import (
         STRAGGLER_X1000,
@@ -244,8 +244,76 @@ def test_straggler_keys_from_lineage_report(spark, tmp_path):
     )
     append_lineage(spark, lin_dir, "extract", counts, wall_ms=10)
     assert STRAGGLER_X1000 == 10_000  # 5000 vs p50=50 -> 100x -> flagged
-    docs = spark.createDataFrame(
-        [("https://x.example/1", b"<p>x</p>")], "url string, html binary"
+    assert _straggler_keys(spark, lin_dir, {}) == {3}
+    assert _straggler_keys(spark, None, {}) == set()
+
+
+def test_write_time_counters_equal_output_read_back(spark, tmp_path):
+    """The per-key lineage counters are observed while the output is
+    written; they must equal a pyarrow read-back of that output: a
+    corrupt page (row 499) counts as an error, and a key with no input
+    rows logs n_rows=0."""
+    import pyarrow.parquet as pq
+
+    from win64_local_ocr_tool_spark.corpus import gen_row
+
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    keyed = with_partition_key(corpus_df(spark, N), 8)
+    err_key = keyed.filter(F.col("url") == gen_row(499)["url"]).first()[
+        "partition_key"
+    ]
+    empty_key = (err_key + 1) % 8
+    docs = keyed.filter(F.col("partition_key") != empty_key).drop(
+        "partition_key"
     )
-    assert _straggler_keys(spark, docs, lin_dir) == {3}
-    assert _straggler_keys(spark, docs, None) == set()
+    run_extraction(
+        spark, docs, out_dir=out, lineage_dir=lin, n_buckets=8,
+        commit_batches=2,
+    )
+    lineage = {
+        r["partition_key"]: (r["n_rows"], r["n_errors"])
+        for r in spark.read.parquet(lin).collect()
+    }
+    table = pq.read_table(out, columns=["partition_key", "status"]).to_pandas()
+    table["partition_key"] = table["partition_key"].astype(int)
+    written = {
+        k: (len(g), int((g["status"] == "error").sum()))
+        for k, g in table.groupby("partition_key")
+    }
+    assert lineage == {**written, empty_key: (0, 0)}
+    assert lineage[err_key][1] >= 1
+
+
+def test_read_lineage_mixed_fp_vintage(spark, tmp_path):
+    """A lineage dir holding a file written before the ``fp`` column
+    existed and a file with it reads with ``fp`` on every read: NULL for
+    the old rows, the value for the new ones."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from win64_local_ocr_tool_spark.lineage import append_lineage, read_lineage
+
+    lin = tmp_path / "lin"
+    lin.mkdir()
+    old = pa.table({
+        "stage": ["curate_exact"], "partition_key": pa.array([0], pa.int32()),
+        "n_rows": [10], "n_errors": [0], "wall_ms": [5], "status": ["done"],
+        "run_id": ["old"], "ts": [datetime.datetime(2024, 1, 1)],
+    })
+    # sorts before the appended part files, whose footers carry fp
+    pq.write_table(old, str(lin / "part-0000-old.parquet"))
+    counts = spark.createDataFrame(
+        [(0, 10, 0)], "partition_key int, n_rows long, n_errors long"
+    )
+    append_lineage(
+        spark, str(lin), "curate_exact", counts, wall_ms=7, run_id="new",
+        fp=123,
+    )
+    for _ in range(3):
+        got = {
+            r["run_id"]: r["fp"]
+            for r in read_lineage(spark, str(lin)).collect()
+        }
+        assert got == {"old": None, "new": 123}

@@ -91,7 +91,12 @@ def parse_mp4_meta(payload: bytes) -> dict:
     if mvhd is None:
         raise ValueError("moov without mvhd")
     vs, _ve = mvhd
-    version = payload[vs]
+    # the reads below end with the duration field: version/flags (4),
+    # creation/modification times and timescale (4+4+4 in v0, 8+8+4 in
+    # v1), duration (4 in v0, 8 in v1) -> 20 / 32 body bytes
+    version = payload[vs] if vs < _ve else 0
+    if vs + (32 if version == 1 else 20) > _ve:
+        raise ValueError("truncated mvhd")
     if version == 1:
         timescale = struct.unpack_from(">I", payload, vs + 20)[0]
         duration = struct.unpack_from(">Q", payload, vs + 24)[0]

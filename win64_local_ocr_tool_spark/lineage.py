@@ -46,7 +46,9 @@ def read_lineage(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
         f.endswith(".parquet") for f in _walk_files(lineage_dir)
     ):
         return None
-    return spark.read.parquet(lineage_dir)
+    # explicit schema: inferred from one footer, a dir mixing pre-``fp``
+    # files with ``fp`` files may drop the column; here old rows read NULL
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_dir)
 
 
 def _walk_files(d: str):

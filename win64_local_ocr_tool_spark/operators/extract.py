@@ -362,8 +362,10 @@ def extract_all(
       mega row: effectively free on a corpus where mega pages are 1 in
       10^3 (gated in tests/test_plans.py).
     - Otherwise the predicate is ``length(html)``, which no format can
-      push below the scan — the honest price is one extra full scan,
-      which is why the distributed path is opt-in rather than default.
+      push below the scan, so the mega branch costs a second full scan
+      and a shuffle. ``pipeline.run_extraction`` builds this split only
+      for commit groups whose size probe saw a page at/over the
+      threshold; every other group passes ``mega_bytes=None``.
     """
     if mega_bytes is None:
         return extract_normal(docs)

@@ -3,12 +3,16 @@
 The Spark restatement of the reference's flagship flow
 (``POST /upload-manuscript``, SURVEY.md §3.1):
 
-    documents ──(mega? no)──> mapInPandas(extract)            ─┐
-              └─(mega? yes)─> chunk -> classify -> reassemble ─┴> extracted
-    extracted ── write parquet partitioned by partition_key (dynamic
-                 overwrite = idempotent per-partition rerun)
-              ── lineage append: (stage, partition_key, n_rows,
-                 n_errors, wall_ms, 'done', run_id, ts)
+    documents ── size probe: max/sum payload bytes per partition_key
+    each commit group of keys:
+      (no page >= mega_bytes) ─> mapInPandas(extract) ─────────┐
+      (a page >= mega_bytes)  ─> normal/mega split; mega rows: ├> extracted
+                                 chunk -> classify -> reassemble ┘
+      extracted ── write parquet partitioned by partition_key (dynamic
+                   overwrite = idempotent per-partition rerun), counting
+                   n_rows/n_errors per key while the rows are written
+                ── lineage append: (stage, partition_key, n_rows,
+                   n_errors, wall_ms, 'done', run_id, ts)
 
 Resume: a fresh invocation with ``resume=True`` left-anti joins the
 lineage done-keys and recomputes only missing partitions; output
@@ -19,15 +23,17 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .lineage import (
     append_lineage,
-    prune_done,
+    done_keys,
     read_lineage,
+    straggler_report,
     with_partition_key,
 )
 from .operators.extract import extract_all
+from .staged import merge_by_key
 
 STAGE_EXTRACT = "extract"
 
@@ -38,10 +44,29 @@ STAGE_EXTRACT = "extract"
 STRAGGLER_X1000 = 10_000
 
 
+def _bucket_sizes(docs: DataFrame) -> dict[int, tuple[int, int]]:
+    """Size probe: partition_key -> (max, sum) payload bytes, one
+    aggregate with n_buckets output rows. The size is the ``n_bytes``
+    ingest-metadata column when the source recorded it (a thin-column
+    scan), ``length(html)`` otherwise. A NULL ``n_bytes`` (mixed-vintage
+    table) counts as unbounded in the max, so its key plans the chunk
+    branch where ``extract_all`` routes the row by ``length(html)``, and
+    as 0 in the sum. Plans only: both branches are byte-identical (halo
+    proof), so a stale probe changes the physical plan, never the
+    output."""
+    if "n_bytes" in docs.columns:
+        nb = F.col("n_bytes")
+        top, size = F.coalesce(nb, F.lit(1 << 62)), F.coalesce(nb, F.lit(0))
+    else:
+        top = size = F.coalesce(F.length("html"), F.lit(0))
+    agg = docs.groupBy("partition_key").agg(F.max(top), F.sum(size))
+    return {int(k): (int(m), int(s)) for k, m, s in agg.collect()}
+
+
 def _straggler_keys(
     spark: SparkSession,
-    docs: DataFrame,
     lineage_dir: str | None,
+    bucket_sizes: dict[int, tuple[int, int]],
 ) -> set[int]:
     """Partitions to route through the chunk path on resume (r4 verdict
     item 3 — the straggler report becomes actionable). Two signal
@@ -50,16 +75,12 @@ def _straggler_keys(
     - LINEAGE: ``straggler_report`` rows for the extract stage at/over
       STRAGGLER_X1000 — partitions a prior epoch observed fat (an
       incremental re-run over the same key space hits them again);
-    - INPUT BYTES: per-partition sum of the ``n_bytes`` ingest-metadata
-      column over the REMAINING docs (a killed run's fat partition has
-      no lineage row — but its input size is known before any work).
-      One thin-column aggregate, n_buckets output rows; discrete
-      median by explicit rank (the straggler_report convention). Only
-      computed when the column exists — length(html) would cost a full
-      payload scan just to plan one.
+    - INPUT BYTES: the size probe's (``_bucket_sizes``) per-partition
+      sums over the REMAINING docs (a killed run's fat partition has no
+      lineage row — but its input size is known before any work);
+      discrete median by explicit rank (the straggler_report
+      convention).
     """
-    from .lineage import straggler_report
-
     fat: set[int] = set()
     if lineage_dir:
         lin = read_lineage(spark, lineage_dir)
@@ -69,23 +90,14 @@ def _straggler_keys(
                 & (F.col("skew_x1000") >= STRAGGLER_X1000)
             )
             fat |= {int(r["partition_key"]) for r in rep.collect()}
-    if "n_bytes" in docs.columns:
-        sizes = sorted(
-            (int(r["pk"]), int(r["pbytes"]))
-            for r in docs.groupBy(
-                F.col("partition_key").alias("pk")
-            )
-            .agg(F.sum(F.coalesce(F.col("n_bytes"), F.lit(0))).alias("pbytes"))
-            .collect()
-        )
-        if sizes:
-            by_size = sorted(b for _, b in sizes)
-            med = max(by_size[-(-len(by_size) // 2) - 1], 1)
-            fat |= {
-                pk
-                for pk, b in sizes
-                if b * 1000 >= STRAGGLER_X1000 * med
-            }
+    if bucket_sizes:
+        by_size = sorted(b for _, b in bucket_sizes.values())
+        med = max(by_size[-(-len(by_size) // 2) - 1], 1)
+        fat |= {
+            pk
+            for pk, (_, b) in bucket_sizes.items()
+            if b * 1000 >= STRAGGLER_X1000 * med
+        }
     return fat
 
 
@@ -115,29 +127,35 @@ def run_extraction(
     COUNT, so documents beyond a few MB must leave the batched normal
     path (a 256-row batch of 100 MB payloads would OOM a Python
     worker) and take the distributed chunk path, which also spreads a
-    single giant document across tasks (SURVEY §7.5 item 4).
+    single giant document across tasks (SURVEY §7.5 item 4). A
+    materialized run plans that split from one size probe
+    (``_bucket_sizes``) run before any work: only keys whose largest
+    page reaches the threshold build the chunk branch and its second
+    scan; every other key runs the plain scan -> mapInPandas -> write.
+    The lazy path (no ``out_dir``) probes only when a resume needs the
+    sums for its straggler split; without a probe it plans the split
+    for every key.
 
     ``commit_batches=K``: process the bucket keyspace in K groups, each
     written AND lineage-logged before the next starts — a SIGKILLed job
     loses at most the in-flight group instead of the whole run (the
     partition-granular kill/resume the north rule demands; tested with
-    a real SIGKILL in tests/test_kill_resume.py). Cost: the source is
-    scanned once per group when it isn't physically partitioned by the
-    key — on a production Iceberg table bucketed by hash(url) each
-    group prunes to its own files and the extra scans disappear.
+    a real SIGKILL in tests/test_kill_resume.py). A group costs one
+    write job and one lineage append: its per-key n_rows/n_errors are
+    observed during the write, never read back. The source is scanned
+    once per group when it isn't physically partitioned by the key —
+    on a production Iceberg table bucketed by hash(url) each group
+    prunes to its own files.
 
     ``split_stragglers`` (resume runs with ``mega_bytes`` set): flagged
     straggler partitions (``_straggler_keys`` — lineage skew report +
-    input-bytes skew over the remaining work) route through the
-    distributed chunk path at the finer ``straggler_mega_bytes``
+    the probe's input-bytes skew over the remaining work) route through
+    the distributed chunk path at the finer ``straggler_mega_bytes``
     threshold (default mega_bytes/8) instead of re-running as one fat
     in-task unit — byte-identical by the halo proof, so this is a
     physical re-plan only (r4 verdict item 3; planted-partition test
     in tests/test_resume.py).
     """
-    from .lineage import done_keys
-    from .operators.extract import EXTRACTED_SCHEMA
-
     docs = with_partition_key(docs, n_buckets)
 
     n_pruned = 0
@@ -156,40 +174,41 @@ def run_extraction(
         ["n_bytes"] if "n_bytes" in docs.columns else []
     )
 
-    fat_keys: set[int] = set()
-    if resume and split_stragglers and mega_bytes is not None:
-        fat_keys = _straggler_keys(spark, docs, lineage_dir)
+    split = resume and split_stragglers and mega_bytes is not None
+    sizes = _bucket_sizes(docs) if out_dir is not None or split else None
+    fat_keys = _straggler_keys(spark, lineage_dir, sizes) if split else set()
     fine_mega = straggler_mega_bytes or max((mega_bytes or 0) // 8, 64 << 10)
 
-    def extract(subset):
+    def plan(sel, keys, mega):
+        # the chunk branch only where the probe saw a page at/over the
+        # threshold; with no probe (lazy path) every key may hold one
+        if sizes is not None and mega is not None and max(
+            (sizes.get(k, (0, 0))[0] for k in keys), default=0
+        ) < mega:
+            mega = None
+        return extract_all(sel, mega_bytes=mega, chunk_blocks=chunk_blocks)
+
+    def extract(subset, keys):
         sel = subset.select(*base_cols)
-        if fat_keys:
-            keys = sorted(fat_keys)
-            ext = extract_all(
-                sel.filter(~F.col("partition_key").isin(*keys)),
-                mega_bytes=mega_bytes,
-                chunk_blocks=chunk_blocks,
-            ).unionByName(
-                # straggler partitions: same kernels, finer dispatch —
-                # documents >= fine_mega fan out as chunks across the
-                # cluster instead of one task carrying the whole range
-                extract_all(
-                    sel.filter(F.col("partition_key").isin(*keys)),
-                    mega_bytes=fine_mega,
-                    chunk_blocks=chunk_blocks,
-                )
+        fat = [k for k in keys if k in fat_keys]
+        if fat:
+            # straggler partitions: same kernels, finer dispatch —
+            # documents >= fine_mega fan out as chunks across the
+            # cluster instead of one task carrying the whole range
+            thin = [k for k in keys if k not in fat_keys]
+            is_fat = F.col("partition_key").isin(*fat)
+            ext = plan(sel.filter(~is_fat), thin, mega_bytes).unionByName(
+                plan(sel.filter(is_fat), fat, fine_mega)
             )
         else:
-            ext = extract_all(
-                sel, mega_bytes=mega_bytes, chunk_blocks=chunk_blocks
-            )
+            ext = plan(sel, keys, mega_bytes)
         # extract_all consumes (url, html); re-attach the key derivably
         # (no join — the key is a pure function of url).
         return with_partition_key(ext, n_buckets)
 
     if out_dir is None:
         return {
-            "extracted": extract(docs),
+            "extracted": extract(docs, range(n_buckets)),
             "pruned_partitions": n_pruned,
             "straggler_split_partitions": sorted(fat_keys),
         }
@@ -200,53 +219,34 @@ def run_extraction(
     step = -(-len(todo_keys) // k_groups) if todo_keys else 1
     groups = [todo_keys[i : i + step] for i in range(0, len(todo_keys), step)]
 
-    n_docs = n_errors = n_parts = 0
-    wall_total = 0
-    for gi, keys in enumerate(groups):
-        subset = (
-            docs
-            if len(groups) == 1
-            else docs.filter(F.col("partition_key").isin(*keys))
+    n_docs = n_errors = wall_total = 0
+    pk, err = F.col("partition_key"), F.col("status") == "error"
+    for keys in groups:
+        subset = docs if len(groups) == 1 else docs.filter(pk.isin(*keys))
+        # per-key counters taken while the rows are written: two
+        # conditional counts per key of the group (bounded by
+        # n_buckets / commit_batches), no read-back of the output
+        obs = Observation()
+        observed = extract(subset, keys).observe(
+            obs,
+            *(F.count_if(pk == k).alias(f"n{k}") for k in keys),
+            *(F.count_if((pk == k) & err).alias(f"e{k}") for k in keys),
         )
         t0 = time.monotonic()
         # single upsert seam shared with the staged pipeline: Iceberg
         # overwritePartitions when a catalog is configured, dynamic
         # parquet partition-overwrite otherwise (staged.merge_by_key)
-        from .staged import merge_by_key
-
-        merge_by_key(extract(subset), out_dir)
+        merge_by_key(observed, out_dir)
         wall_ms = int((time.monotonic() - t0) * 1000)
         wall_total += wall_ms
-
-        # Per-partition counters from the just-written columnar output:
-        # a cheap scan of two thin columns, never the text. Explicit
-        # schema: an empty run writes no parquet footers to infer from.
-        from .staged import read_stage
-
-        written = read_stage(
-            spark, out_dir, EXTRACTED_SCHEMA + ", partition_key int"
-        ).filter(F.col("partition_key").isin(*keys))
-        per_key = written.groupBy("partition_key").agg(
-            F.count("*").alias("n_rows"),
-            F.sum((F.col("status") == "error").cast("long")).alias("n_errors"),
-        )
-        got = {r["partition_key"]: r for r in per_key.collect()}
+        got = obs.get
         # keys with zero input rows still get a lineage row (n_rows=0):
         # without one they stay in todo forever and every resume re-runs
         # an empty extract job for them
-        rows = [
-            (
-                k,
-                got[k]["n_rows"] if k in got else 0,
-                got[k]["n_errors"] if k in got else 0,
-            )
-            for k in keys
-        ]
-        for _, n_r, n_e in rows:
-            n_parts += 1
-            n_docs += n_r
-            n_errors += n_e
-        if lineage_dir and rows:
+        rows = [(k, got[f"n{k}"], got[f"e{k}"]) for k in keys]
+        n_docs += sum(r[1] for r in rows)
+        n_errors += sum(r[2] for r in rows)
+        if lineage_dir:
             per_key_df = spark.createDataFrame(
                 rows, schema="partition_key int, n_rows long, n_errors long"
             )
@@ -258,7 +258,7 @@ def run_extraction(
         "out_dir": out_dir,
         "n_docs": int(n_docs),
         "n_errors": int(n_errors),
-        "n_partitions": n_parts,
+        "n_partitions": len(todo_keys),
         "pruned_partitions": n_pruned,
         "commit_groups": len(groups),
         "wall_ms": wall_total,
@@ -455,22 +455,18 @@ def run_curation_staged(
         lin = read_lineage(spark, lineage_dir)
         if lin is not None:
             latest: dict[str, tuple] = {}
-            cols = ["stage", "n_rows", "ts", "run_id"]
-            has_fp = "fp" in lin.columns
             for r in (
                 lin.filter(
                     (F.col("status") == "done")
                     & F.col("stage").startswith("curate_")
                 )
-                .select(*cols, *(["fp"] if has_fp else []))
+                .select("stage", "n_rows", "ts", "run_id", "fp")
                 .collect()
             ):
                 name = r["stage"][len("curate_"):]
                 key = (r["ts"], r["run_id"] or "")
                 if name not in latest or key > latest[name][0]:
-                    latest[name] = (
-                        key, r["n_rows"], r["fp"] if has_fp else None
-                    )
+                    latest[name] = (key, r["n_rows"], r["fp"])
             done_stages = {
                 k: (int(v[1]), None if v[2] is None else int(v[2]))
                 for k, v in latest.items()

@@ -951,6 +951,7 @@ def test_mp3_frame_walk_metadata_exact():
     trailers are skipped; the boundary split holds (free-format ->
     NotImplementedError, junk/truncation -> ValueError)."""
     from win64_local_ocr_tool_spark.kernels.mp3meta import (
+        _parse_frame_header,
         encode_mp3_frames,
         parse_mp3_meta,
     )
@@ -986,10 +987,31 @@ def test_mp3_frame_walk_metadata_exact():
         parse_mp3_meta(b"not audio at all" * 10)
     with pytest.raises(ValueError):
         parse_mp3_meta(p[:3])
-    free = bytearray(p)
-    free[2] = (0 << 4) | (free[2] & 0x0F)  # br_idx 0 = free-format
+    # a free-format stream: every frame header has br_idx 0
+    free, off = bytearray(p), 0
+    while off < len(free):
+        frame_len = _parse_frame_header(*free[off : off + 4])[6]
+        free[off + 2] &= 0x0F
+        off += frame_len
     with pytest.raises(NotImplementedError):
         parse_mp3_meta(bytes(free))
+
+
+def test_mp3_free_format_lookalike_in_junk_is_skipped():
+    """ADVICE r5 #1: a free-format header pattern inside the leading
+    junk is a lookalike, not the stream; the sync scan keeps going and
+    the valid MP3 after the junk parses as it does without the junk."""
+    from win64_local_ocr_tool_spark.kernels.mp3meta import (
+        _parse_frame_header,
+        encode_mp3_frames,
+        parse_mp3_meta,
+    )
+
+    p = encode_mp3_frames(9, version=2, layer=3, br_idx=6, sr_idx=1)
+    lookalike = bytes((0xFF, 0xFB, 0x00, 0x00))
+    assert _parse_frame_header(*lookalike) == "free"
+    junk = b"\x00leading junk" + lookalike + b"more junk\x00"
+    assert parse_mp3_meta(junk + p) == parse_mp3_meta(p)
 
 
 def test_mp3_parse_never_hangs_on_corrupt(spark):

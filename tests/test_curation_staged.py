@@ -58,6 +58,32 @@ def test_all_stages_materialize_with_lineage(spark, staged):
     assert 0 < stats["n_corpus"] < 500
 
 
+# stage name -> its table under the work dir
+STAGE_TABLES = {
+    "exact": "exact", "minhash_sig": "sig", "lsh_pairs": "pairs",
+    "components": "components", "canonical": "canonical/documents.parquet",
+    "decontaminate": "contaminated", "scrub": "scrubbed",
+    "final_corpus": "corpus",
+}
+
+
+def test_write_time_counters_equal_read_back(spark, staged):
+    """Every stage's lineage n_rows and fp are observed while the stage
+    table is written; they must equal a fresh read of that table."""
+    from win64_local_ocr_tool_spark.lineage import content_fingerprint
+
+    root, _stats = staged
+    lin = spark.read.parquet(str(root / "lineage")).collect()
+    assert len(lin) == len(STAGE_TABLES)
+    for r in lin:
+        tbl = spark.read.parquet(
+            str(root / "work" / STAGE_TABLES[r["stage"][len("curate_"):]])
+        )
+        assert (r["n_rows"], r["fp"]) == (
+            tbl.count(), content_fingerprint(tbl)
+        ), r["stage"]
+
+
 def test_kill_lists_are_enforced(spark, staged):
     root, stats = staged
     work = str(root / "work")
@@ -364,12 +390,10 @@ def test_exact_precollapse_preserves_canonical_set(spark, tmp_path):
     assert not any(d >= 100000 for d in staged_kept)
 
 
-def test_resume_detects_count_equal_content_divergence(spark, staged, tmp_path):
-    """ADVICE r4: a stage table rewritten with the SAME row count but
-    different content (the count-collision a later killed rerun from
-    different upstream data can leave) must not be silently reused —
-    the lineage marker's content fingerprint catches it, the stage
-    recomputes, and the recompute cascades downstream."""
+def _resume_after_shifting_exact(spark, staged, tmp_path, column, by):
+    """Copy the fixture's work and lineage, rewrite ``exact`` with the
+    same row count but ``column`` shifted by ``by``, and resume: every
+    stage must recompute, and the corpus must equal the fixture's."""
     import shutil
 
     root, _stats = staged
@@ -377,9 +401,8 @@ def test_resume_detects_count_equal_content_divergence(spark, staged, tmp_path):
     shutil.copytree(root / "work", work2)
     lin2 = tmp_path / "lineage"
     shutil.copytree(root / "lineage", lin2)
-    # same cardinality, shifted ids: count-only validation would pass
     pdf = spark.read.parquet(str(work2 / "exact")).toPandas()
-    pdf["doc_id"] = pdf["doc_id"] + 1_000_000
+    pdf[column] = pdf[column] + by
     shutil.rmtree(work2 / "exact")
     spark.createDataFrame(pdf).write.parquet(str(work2 / "exact"))
 
@@ -393,3 +416,22 @@ def test_resume_detects_count_equal_content_divergence(spark, staged, tmp_path):
     assert _corpus_fingerprint(spark, str(work2)) == _corpus_fingerprint(
         spark, str(root / "work")
     )
+
+
+def test_resume_detects_count_equal_content_divergence(spark, staged, tmp_path):
+    """ADVICE r4: a stage table rewritten with the SAME row count but
+    different content (the count-collision a later killed rerun from
+    different upstream data can leave) must not be silently reused —
+    the lineage marker's content fingerprint catches it, the stage
+    recomputes, and the recompute cascades downstream. Here the ids
+    shift, so count-only validation would pass."""
+    _resume_after_shifting_exact(spark, staged, tmp_path, "doc_id", 1_000_000)
+
+
+def test_resume_detects_content_change_outside_key_column(
+    spark, staged, tmp_path
+):
+    """The fingerprint covers whole rows: ``exact`` with the same
+    doc_ids but a changed ``representative`` column fails validation
+    too."""
+    _resume_after_shifting_exact(spark, staged, tmp_path, "representative", 1)

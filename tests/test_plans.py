@@ -76,23 +76,6 @@ def test_mega_branch_prunes_on_ingest_metadata(spark, tmp_path):
     assert sum("IsNull(n_bytes)" in s for s in scans) == 2, scans
 
 
-def test_resume_anti_join_is_broadcast(spark, tmp_path, sf_dir):
-    import pandas as pd
-    from win64_local_ocr_tool_spark.lineage import append_lineage, prune_done, with_partition_key
-
-    lin = str(tmp_path / "lineage")
-    per_key = spark.createDataFrame(
-        pd.DataFrame({"partition_key": [0, 1], "n_rows": [5, 5], "n_errors": [0, 0]}),
-        schema="partition_key int, n_rows long, n_errors long",
-    )
-    append_lineage(spark, lin, "extract", per_key, 100)
-    docs = with_partition_key(corpus_df(spark, 50), 8)
-    pruned, n_done = prune_done(docs, spark, lin, "extract")
-    assert n_done == 2
-    plan = _plan(pruned)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-
-
 def test_majority_mask_join_is_broadcast(spark, sf_dir):
     """f8's tiny majority table (one row per group) must broadcast back
     onto the fact side — no second shuffle of events."""

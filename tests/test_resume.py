@@ -305,11 +305,11 @@ def test_read_lineage_mixed_fp_vintage(spark, tmp_path):
     # sorts before the appended part files, whose footers carry fp
     pq.write_table(old, str(lin / "part-0000-old.parquet"))
     counts = spark.createDataFrame(
-        [(0, 10, 0)], "partition_key int, n_rows long, n_errors long"
+        [(0, 10, 0, 123)],
+        "partition_key int, n_rows long, n_errors long, fp long",
     )
     append_lineage(
-        spark, str(lin), "curate_exact", counts, wall_ms=7, run_id="new",
-        fp=123,
+        spark, str(lin), "curate_exact", counts, wall_ms=7, run_id="new"
     )
     for _ in range(3):
         got = {

@@ -64,6 +64,31 @@ def test_staged_matches_golden_and_resumes(spark, tmp_path):
         assert keys.is_unique, stage
 
 
+def test_staged_empty_buckets_log_zero_rows_and_resume_prunes_all(
+    spark, tmp_path
+):
+    """More buckets than documents: some buckets get no rows. Every
+    bucket still logs a done-row (n_rows=0 for the empty ones), so a
+    resume prunes all of them in both stages."""
+    n, n_buckets = 12, 32
+    docs = corpus_df(spark, n)
+    work = str(tmp_path / "work")
+    stats = run_staged_extraction(spark, docs, work, n_buckets=n_buckets)
+    assert stats["n_docs"] == n
+    lin = spark.read.parquet(stats["lineage_dir"]).toPandas()
+    for stage in ("tokenize", "assemble"):
+        rows = lin[lin["stage"] == stage]
+        assert sorted(rows["partition_key"]) == list(range(n_buckets))
+        assert rows["n_rows"].sum() == n and (rows["n_rows"] == 0).any()
+
+    again = run_staged_extraction(
+        spark, docs, work, n_buckets=n_buckets, resume=True
+    )
+    assert again["tokenize_pruned"] == again["assemble_pruned"] == n_buckets
+    assert again["assemble_partitions_new"] == 0
+    assert again["n_docs"] == n
+
+
 def test_overrides_replace_classifier_flags(spark):
     """The human-correction artifact (SURVEY §3.2): per-(url, block_id)
     keep/drop overrides win over the classifier; untouched documents

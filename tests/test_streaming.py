@@ -67,6 +67,8 @@ def test_incremental_two_arrivals_no_dupes(spark, dirs):
     lin = spark.read.parquet(dirs["lineage"]).toPandas()
     assert set(lin["stage"]) == {"stream_extract"}
     assert lin["n_rows"].sum() == 200
+    # counters and wall time are taken during each epoch's write
+    assert (lin["wall_ms"] > 0).all()
 
 
 def test_incremental_epoch_bounding(spark, dirs):

@@ -95,7 +95,8 @@ def parse_mp3_meta(payload: bytes) -> dict:
     ID3v2 tags are skipped (syncsafe size), an ID3v1 trailer ("TAG",
     128 bytes) is tolerated, and up to _SYNC_SCAN_LIMIT bytes of
     leading junk are scanned for the first sync. Malformed (no valid
-    frame) -> ValueError; free-format bitrate -> NotImplementedError."""
+    frame) -> ValueError; free-format bitrate (only free-format headers
+    in the scan window) -> NotImplementedError."""
     off = 0
     if payload[:3] == b"ID3" and len(payload) >= 10:
         size = 0
@@ -105,21 +106,22 @@ def parse_mp3_meta(payload: bytes) -> dict:
     end = len(payload)
     if end >= 128 and payload[end - 128: end - 125] == b"TAG":
         end -= 128
-    # scan for the first valid frame header
+    # scan for the first valid frame header; a free-format header may be
+    # a lookalike inside junk, so it only decides when no other is found
     first = None
+    seen_free = False
     scan_end = min(off + _SYNC_SCAN_LIMIT, end - 4)
     while off <= scan_end:
         h = _parse_frame_header(
             payload[off], payload[off + 1], payload[off + 2], payload[off + 3]
         )
-        if h == "free":
-            raise NotImplementedError(
-                "free-format MP3 bitrate needs a real codec"
-            )
-        if h is not None:
+        if h not in (None, "free"):
             first = h
             break
+        seen_free |= h == "free"
         off += 1
+    if first is None and seen_free:
+        raise NotImplementedError("free-format MP3 bitrate needs a real codec")
     if first is None:
         raise ValueError("no MP3 frame sync found")
     ver, layer, _, sr, channels, _, _ = first

@@ -3,9 +3,10 @@
 Analog of the reference's SQLite logs (``models.py:12-30`` — one row per
 extracted line, committed per page) lifted to partition granularity, per
 the north rule: every stage appends (stage, partition_key, n_rows,
-n_errors, wall_ms, status, ts) to an append-only checkpoint table; a
-restarted job left-anti joins the done keys and recomputes only the
-missing partitions.
+n_errors, wall_ms, status, ts, fp) to an append-only checkpoint table,
+with counters taken while the stage writes (``pipeline.commit_stage``); a
+restarted job drops the done keys' rows and recomputes only the missing
+partitions.
 
 Sandbox note: the runtime has no Iceberg catalog jars, so the checkpoint
 table is parquet-append with the same semantics (append-only; readers
@@ -21,7 +22,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 LINEAGE_SCHEMA = (
     "stage string, partition_key int, n_rows long, n_errors long, "
@@ -67,24 +68,15 @@ def done_keys(spark: SparkSession, lineage_dir: str, stage: str) -> DataFrame | 
     )
 
 
-def prune_done(
-    df: DataFrame, spark: SparkSession, lineage_dir: str, stage: str
-) -> tuple[DataFrame, int]:
-    """Resume: drop rows whose partition_key is already done.
-
-    Left-anti join against the (tiny, broadcast) done-key set — the
-    U5/J5 operator from SURVEY.md §2.
-    """
-    done = done_keys(spark, lineage_dir, stage)
-    if done is None:
-        return df, 0
-    n_done = done.count()
-    if n_done == 0:
-        return df, 0
-    return (
-        df.join(F.broadcast(done), "partition_key", "left_anti"),
-        n_done,
-    )
+def done_counts(spark: SparkSession, lineage_dir: str, stage: str) -> dict[int, int]:
+    """partition_key -> n_rows of ``stage``'s done-rows, the latest
+    winning; one driver-side collect of the (tiny) lineage table."""
+    lin = read_lineage(spark, lineage_dir)
+    if lin is None:
+        return {}
+    done = lin.filter((F.col("stage") == stage) & (F.col("status") == "done"))
+    rows = done.select("ts", "partition_key", "n_rows").collect()
+    return {k: n for _, k, n in sorted(rows)}
 
 
 def straggler_report(lin: DataFrame, top_k: int = 5) -> DataFrame:
@@ -156,20 +148,21 @@ def straggler_report(lin: DataFrame, top_k: int = 5) -> DataFrame:
     )
 
 
-def content_fingerprint(df: DataFrame, key_col: str | None = None) -> int:
-    """Order-insensitive integer fingerprint of one thin column (the
-    first column unless ``key_col`` names another): sum of
-    crc32(cast(value as string)). The same distributive-checksum trick
-    ``scripts/dedup_stress.py`` / ``scaling_evidence.py`` use —
-    partition-order independent, recomputable from parquet with a
-    single-column scan, and cheap enough to validate a resume skip
-    (ADVICE r4: a count-equal but content-different stage table must
-    not be silently reused)."""
-    col = key_col or df.columns[0]
-    row = df.select(
-        F.sum(F.crc32(F.col(col).cast("string"))).alias("fp")
-    ).first()
-    return int(row["fp"]) if row["fp"] is not None else 0
+def row_hash(df: DataFrame) -> Column:
+    """Whole-row murmur3 ``hash`` over the columns in sorted-name order
+    (a partition column's place on read-back does not move it), as
+    long: the summand of every content fingerprint."""
+    return F.hash(*sorted(df.columns)).cast("long")
+
+
+def content_fingerprint(df: DataFrame) -> int:
+    """Order-insensitive fingerprint of a table: the sum of ``row_hash``
+    over its rows (0 when empty). ``pipeline.commit_stage`` observes the
+    same sum while a stage writes (the lineage ``fp``); this recomputes
+    it from disk, so a resume can validate a stage it skips (ADVICE r4:
+    a count-equal but content-different table must not be reused)."""
+    fp = df.select(F.sum(row_hash(df))).first()[0]
+    return int(fp or 0)
 
 
 def append_lineage(
@@ -179,28 +172,29 @@ def append_lineage(
     per_key_counts: DataFrame,
     wall_ms: int,
     run_id: str | None = None,
-    fp: int | None = None,
 ) -> None:
     """Append one done-row per processed partition_key.
 
     ``per_key_counts``: DataFrame(partition_key int, n_rows long,
-    n_errors long). ``wall_ms`` is the stage wall-clock (per-stage, not
-    per-partition — local mode has no per-task clock worth logging).
-    ``fp``: optional ``content_fingerprint`` of the stage output; a
-    resume skip-path compares it against the on-disk table (NULL =
-    count-only validation, the pre-r5 behavior).
+    n_errors long[, fp long]). ``fp`` is the key's ``content_fingerprint``
+    as ``commit_stage`` observed it during the write; a resume skip path
+    compares it against the on-disk table. Without the column the rows
+    read ``fp`` NULL (count-only validation). ``wall_ms`` is the wall
+    time of the commit's write, copied to every key of the commit
+    (local mode has no per-task clock worth logging).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
+    if "fp" not in per_key_counts.columns:
+        per_key_counts = per_key_counts.withColumn("fp", F.lit(None))
     rows = (
         per_key_counts.withColumn("stage", F.lit(stage))
         .withColumn("wall_ms", F.lit(wall_ms).cast("long"))
         .withColumn("status", F.lit("done"))
         .withColumn("run_id", F.lit(run_id))
         .withColumn("ts", F.current_timestamp())
-        .withColumn("fp", F.lit(fp).cast("long"))
         .select(
             "stage", "partition_key", "n_rows", "n_errors",
-            "wall_ms", "status", "run_id", "ts", "fp",
+            "wall_ms", "status", "run_id", "ts", F.col("fp").cast("long"),
         )
     )
     rows.write.mode("append").parquet(lineage_dir)

@@ -506,8 +506,8 @@ def c_json_roundtrip(spark, sf_dir):
     """,
 )
 def j5_semi_anti_resume(spark, sf_dir):
-    """SURVEY J5/U5 — left-anti (THE resume primitive: all EXCEPT done,
-    lineage.prune_done's shape) + left-semi (EXISTS) + the lineage
+    """SURVEY J5/U5 — left-anti (THE resume primitive: all EXCEPT
+    done) + left-semi (EXISTS) + the lineage
     straggler report (round-4 fold: lineage.straggler_report over a
     deterministic lineage-shaped table — the operational skew surface
     of the checkpoint machinery this family models; part='straggler'

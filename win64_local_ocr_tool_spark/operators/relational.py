@@ -347,8 +347,7 @@ def j3_composite_equi_join(spark, sf_dir):
 )
 def j5_resume_anti_join(spark, sf_dir):
     """Left-anti join — THE resume primitive (all-partitions EXCEPT
-    done-partitions, SURVEY J5/U5; lineage.prune_done uses exactly this
-    shape)."""
+    done-partitions, SURVEY J5/U5)."""
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     return c.join(o, c["c_custkey"] == o["o_custkey"], "left_anti").select(

@@ -13,7 +13,7 @@ md5-per-unit hashing cost.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from .lshpairs import bounded_bucket_pairs, bounded_pairs_ctes
 from .registry import query
@@ -638,10 +638,11 @@ def dedup_components(spark, sf_dir):
     of its own label and its neighbors' labels; converges in <= graph
     diameter rounds (near-dup clusters are shallow). Three scale musts,
     all here: ``localCheckpoint`` truncates the growing lineage every
-    round (else the plan doubles per iteration); the convergence probe
-    is a LIMIT 1 existence check, not a full count; and the probe reads
-    a ``chg`` flag computed inside the label-update select itself —
-    fusing it saves a labels-vs-labels join (one shuffle) per round.
+    round (else the plan doubles per iteration); the convergence flag
+    is a ``count_if`` observed on the frame that checkpoint materializes,
+    so testing it costs no job of its own; and it counts a ``chg`` flag
+    computed inside the label-update select itself — fusing it saves a
+    labels-vs-labels join (one shuffle) per round.
     DuckDB twin: recursive-CTE transitive closure.
     """
     # Size-aware parallelism for the iteration: the candidate-pair graph
@@ -687,18 +688,20 @@ def _cc_from_pairs(pairs_df):
             .agg(F.min("component").alias("neigh_min"))
         )
         neigh_min = F.coalesce(F.col("neigh_min"), labels["component"])
-        new_labels = (
+        # count_if, not max: an empty label table reads 0, not NULL
+        obs = Observation()
+        labels = (
             labels.join(neigh, labels["doc_id"] == neigh["doc_a"], "left")
             .select(
                 labels["doc_id"],
                 F.least(labels["component"], neigh_min).alias("component"),
                 (neigh_min < labels["component"]).alias("chg"),
             )
+            .observe(obs, F.count_if("chg").alias("changed"))
             .localCheckpoint()
+            .drop("chg")
         )
-        changed = new_labels.filter(F.col("chg")).limit(1).count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
+        if obs.get["changed"] == 0:
             return labels
 
 

@@ -8,13 +8,14 @@ The Spark restatement of the reference's flagship flow
       (no page >= mega_bytes) ─> mapInPandas(extract) ─────────┐
       (a page >= mega_bytes)  ─> normal/mega split; mega rows: ├> extracted
                                  chunk -> classify -> reassemble ┘
-      extracted ── write parquet partitioned by partition_key (dynamic
-                   overwrite = idempotent per-partition rerun), counting
-                   n_rows/n_errors per key while the rows are written
+      extracted ── commit_stage: write parquet partitioned by
+                   partition_key (dynamic overwrite = idempotent
+                   per-partition rerun), counting n_rows/n_errors and a
+                   content fingerprint per key while the rows are written
                 ── lineage append: (stage, partition_key, n_rows,
-                   n_errors, wall_ms, 'done', run_id, ts)
+                   n_errors, wall_ms, 'done', run_id, ts, fp)
 
-Resume: a fresh invocation with ``resume=True`` left-anti joins the
+Resume: a fresh invocation with ``resume=True`` drops the rows of the
 lineage done-keys and recomputes only missing partitions; output
 idempotence comes from partition-directory overwrite.
 """
@@ -23,12 +24,14 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from .lineage import (
     append_lineage,
+    content_fingerprint,
     done_keys,
     read_lineage,
+    row_hash,
     straggler_report,
     with_partition_key,
 )
@@ -42,6 +45,56 @@ STAGE_EXTRACT = "extract"
 # documents route through the distributed chunk path at a finer
 # byte threshold instead of re-running as one fat in-task unit
 STRAGGLER_X1000 = 10_000
+
+
+def commit_stage(
+    spark: SparkSession,
+    stage: str,
+    build,
+    write,
+    keys: list[int],
+    *,
+    key: Column | None = None,
+    errors: Column | None = None,
+    lineage_dir: str | None = None,
+    run_id: str | None = None,
+) -> tuple[list[tuple[int, int, int, int]], int]:
+    """The commit seam of every stage write. ``write`` runs once on the
+    frame ``build()`` returns, with one ``DataFrame.observe`` taking per
+    lineage key in ``keys`` the rows, the ``errors`` rows and the content
+    fingerprint (sum of ``lineage.row_hash``) while the rows are written;
+    then one lineage row per key is appended with the wall time of build
+    + write (``build`` is a thunk: some stage bodies do eager checkpoint
+    work). ``key`` names a row's lineage key (default 0, one key for the
+    table; NULL counts nowhere). A key with no rows logs n_rows=0, or it
+    would stay todo and every resume would re-run it. Nothing is read
+    back. Returns ([(key, n_rows, n_errors, fp)], wall_ms)."""
+    key = F.lit(0) if key is None else key
+    err = F.lit(False) if errors is None else errors
+    t0 = time.monotonic()
+    df = build()
+    h = row_hash(df)  # evaluated once per row: only its key's branch
+    obs = Observation()
+    write(
+        df.observe(
+            obs,
+            *(F.count_if(key == k).alias(f"n{k}") for k in keys),
+            *(F.count_if((key == k) & err).alias(f"e{k}") for k in keys),
+            *(F.sum(F.when(key == k, h)).alias(f"f{k}") for k in keys),
+        )
+    )
+    wall_ms = int((time.monotonic() - t0) * 1000)
+    got = obs.get
+    rows = [(k, got[f"n{k}"], got[f"e{k}"], got[f"f{k}"] or 0) for k in keys]
+    if lineage_dir:
+        append_lineage(
+            spark, lineage_dir, stage,
+            spark.createDataFrame(
+                rows, "partition_key int, n_rows long, n_errors long, fp long"
+            ),
+            wall_ms, run_id,
+        )
+    return rows, wall_ms
 
 
 def _bucket_sizes(docs: DataFrame) -> dict[int, tuple[int, int]]:
@@ -140,9 +193,9 @@ def run_extraction(
     written AND lineage-logged before the next starts — a SIGKILLed job
     loses at most the in-flight group instead of the whole run (the
     partition-granular kill/resume the north rule demands; tested with
-    a real SIGKILL in tests/test_kill_resume.py). A group costs one
-    write job and one lineage append: its per-key n_rows/n_errors are
-    observed during the write, never read back. The source is scanned
+    a real SIGKILL in tests/test_kill_resume.py). A group is one
+    ``commit_stage``: one write job and one lineage append, its per-key
+    counters observed during the write, never read back. The source is scanned
     once per group when it isn't physically partitioned by the key —
     on a production Iceberg table bucketed by hash(url) each group
     prunes to its own files.
@@ -220,39 +273,21 @@ def run_extraction(
     groups = [todo_keys[i : i + step] for i in range(0, len(todo_keys), step)]
 
     n_docs = n_errors = wall_total = 0
-    pk, err = F.col("partition_key"), F.col("status") == "error"
+    pk = F.col("partition_key")
     for keys in groups:
         subset = docs if len(groups) == 1 else docs.filter(pk.isin(*keys))
-        # per-key counters taken while the rows are written: two
-        # conditional counts per key of the group (bounded by
-        # n_buckets / commit_batches), no read-back of the output
-        obs = Observation()
-        observed = extract(subset, keys).observe(
-            obs,
-            *(F.count_if(pk == k).alias(f"n{k}") for k in keys),
-            *(F.count_if((pk == k) & err).alias(f"e{k}") for k in keys),
+        rows, wall_ms = commit_stage(
+            spark, STAGE_EXTRACT, lambda: extract(subset, keys),
+            # single upsert seam shared with the staged pipeline: Iceberg
+            # overwritePartitions when a catalog is configured, dynamic
+            # parquet partition-overwrite otherwise (staged.merge_by_key)
+            lambda df: merge_by_key(df, out_dir),
+            keys, key=pk, errors=F.col("status") == "error",
+            lineage_dir=lineage_dir, run_id=run_id,
         )
-        t0 = time.monotonic()
-        # single upsert seam shared with the staged pipeline: Iceberg
-        # overwritePartitions when a catalog is configured, dynamic
-        # parquet partition-overwrite otherwise (staged.merge_by_key)
-        merge_by_key(observed, out_dir)
-        wall_ms = int((time.monotonic() - t0) * 1000)
         wall_total += wall_ms
-        got = obs.get
-        # keys with zero input rows still get a lineage row (n_rows=0):
-        # without one they stay in todo forever and every resume re-runs
-        # an empty extract job for them
-        rows = [(k, got[f"n{k}"], got[f"e{k}"]) for k in keys]
         n_docs += sum(r[1] for r in rows)
         n_errors += sum(r[2] for r in rows)
-        if lineage_dir:
-            per_key_df = spark.createDataFrame(
-                rows, schema="partition_key int, n_rows long, n_errors long"
-            )
-            append_lineage(
-                spark, lineage_dir, STAGE_EXTRACT, per_key_df, wall_ms, run_id
-            )
 
     return {
         "out_dir": out_dir,
@@ -344,14 +379,17 @@ def run_crawl_to_corpus(
     extracted_to_documents(extracted).write.mode("overwrite").parquet(
         f"{docs_dir}/documents.parquet"
     )
-    corpus = curate_documents(spark, docs_dir, benchmark_dir)
-    corpus.write.mode("overwrite").parquet(f"{work_dir}/corpus")
-    n_corpus = spark.read.parquet(f"{work_dir}/corpus").count()
+    # counted while written; no lineage: curation reruns from the table
+    rows, _ = commit_stage(
+        spark, "corpus", lambda: curate_documents(spark, docs_dir, benchmark_dir),
+        lambda df: df.write.mode("overwrite").parquet(f"{work_dir}/corpus"),
+        [0],
+    )
     return {
         **{f"extract_{k}": v for k, v in ext_stats.items()},
         "docs_dir": docs_dir,
         "corpus_dir": f"{work_dir}/corpus",
-        "n_corpus_docs": int(n_corpus),
+        "n_corpus_docs": rows[0][1],
     }
 
 
@@ -420,14 +458,14 @@ def run_curation_staged(
     killed mid-overwrite leaves a corrupt stage table while the first
     run's marker still exists, so a skipped stage is VALIDATED against
     its marker (footer-only row count == the latest done-row's n_rows
-    AND an order-insensitive crc fingerprint of the key column matches
-    the marker's — count-equality alone would trust a same-cardinality
-    table rewritten from different upstream data; unreadable or
-    mismatched -> recompute), and any recompute CASCADES to
-    every later stage (their tables may derive from the corrupt one).
-    Engine-agnostic: no reliance on parquet ``_SUCCESS`` files, so
-    stage tables can move behind the Iceberg ``merge_by_key`` seam
-    unchanged."""
+    AND ``content_fingerprint``, a sum of whole-row hashes, == the
+    ``fp`` that ``commit_stage`` observed while writing the table;
+    unreadable or mismatched -> recompute), and any recompute CASCADES
+    to every later stage. Markers from earlier versions hold a crc of
+    the first column, never match, and so recompute their stage once
+    (the safe direction). Engine-agnostic: no reliance on parquet
+    ``_SUCCESS`` files, so stage tables can move behind the Iceberg
+    ``merge_by_key`` seam unchanged."""
     from .operators.textops import (
         DECON_W,
         QUALITY_STOPWORDS,
@@ -454,73 +492,48 @@ def run_curation_staged(
             raise ValueError("resume=True requires lineage_dir")
         lin = read_lineage(spark, lineage_dir)
         if lin is not None:
-            latest: dict[str, tuple] = {}
-            for r in (
-                lin.filter(
-                    (F.col("status") == "done")
-                    & F.col("stage").startswith("curate_")
-                )
-                .select("stage", "n_rows", "ts", "run_id", "fp")
-                .collect()
-            ):
-                name = r["stage"][len("curate_"):]
-                key = (r["ts"], r["run_id"] or "")
-                if name not in latest or key > latest[name][0]:
-                    latest[name] = (key, r["n_rows"], r["fp"])
+            marks = lin.filter(
+                (F.col("status") == "done") & F.col("stage").startswith("curate_")
+            ).select("ts", "run_id", "stage", "n_rows", "fp")
             done_stages = {
-                k: (int(v[1]), None if v[2] is None else int(v[2]))
-                for k, v in latest.items()
+                name[len("curate_"):]: (n, fp)
+                for _, _, name, n, fp in sorted(
+                    marks.collect(), key=lambda r: (r["ts"], r["run_id"] or "")
+                )
             }
 
     state = {"dirty": False}  # a recompute invalidates later stages
 
     def stage(name: str, df_thunk, path: str) -> int:
-        # df_thunk is a THUNK, not a DataFrame: several compute bodies
-        # (_sig_from_docs, _pairs_from_sig, _cc_from_pairs,
-        # boilerplate_scrub_chunks) run eager localCheckpoint()/count()
-        # work at DataFrame-BUILD time, so a resumed stage must not
-        # even construct its plan — otherwise "skipped" stages still
-        # pay nearly their full compute.
-        from .lineage import content_fingerprint
-
+        # df_thunk is a THUNK: several compute bodies run eager
+        # localCheckpoint()/count() work at DataFrame-BUILD time, so a
+        # resumed stage must not even construct its plan
         if name in done_stages and not state["dirty"]:
             want_n, want_fp = done_stages[name]
             try:
                 tbl = spark.read.parquet(path)
                 n = tbl.count()  # footer-only
                 # marker fp NULL (pre-fingerprint lineage row) degrades
-                # to count-only validation; otherwise the skip also
-                # costs one thin-column scan — still far below a
-                # recompute, and it catches the count-collision case
+                # to count-only validation; otherwise one table scan
                 ok = n == want_n and (
                     want_fp is None or content_fingerprint(tbl) == want_fp
                 )
             except Exception:
                 ok = False  # unreadable/missing table -> recompute
             if ok:
-                stats["stages"][name] = {
-                    "rows": int(n), "wall_ms": 0, "resumed": True,
-                }
-                return int(n)
+                stats["stages"][name] = {"rows": n, "wall_ms": 0, "resumed": True}
+                return n
             # stale marker (e.g. a later non-resume rerun SIGKILLed
             # mid-overwrite left a partial/divergent table): fall through
         state["dirty"] = True
-        t0 = time.time()
-        df_thunk().write.mode("overwrite").parquet(path)
-        written = spark.read.parquet(path)
-        n = written.count()  # footer-only count
-        fp = content_fingerprint(written)
-        wall_ms = int((time.time() - t0) * 1000)
-        stats["stages"][name] = {"rows": int(n), "wall_ms": wall_ms}
-        if lineage_dir:
-            counts = spark.createDataFrame(
-                [(0, n, 0)], "partition_key int, n_rows long, n_errors long"
-            )
-            append_lineage(
-                spark, lineage_dir, f"curate_{name}", counts, wall_ms,
-                run_id=run_id, fp=fp,
-            )
-        return int(n)
+        rows, wall_ms = commit_stage(
+            spark, f"curate_{name}", df_thunk,
+            lambda df: df.write.mode("overwrite").parquet(path),
+            [0], lineage_dir=lineage_dir, run_id=run_id,
+        )
+        n = rows[0][1]
+        stats["stages"][name] = {"rows": n, "wall_ms": wall_ms}
+        return n
 
     # exact pre-collapse: (doc_id, representative) — shuffles only the
     # 32-char fp (text never travels). min-id per md5 class comes from

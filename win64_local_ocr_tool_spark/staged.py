@@ -3,10 +3,11 @@
 The reference materializes every stage to disk (heatmap JPEGs, points
 txt, labels txt — SURVEY S3-S6); this is that design done right: each
 stage writes a columnar stage table partitioned by the deterministic
-``partition_key``, appends per-partition lineage, and the next stage
-reads the table back. A killed job resumes at (stage, partition)
-granularity; a stage's output is reusable by other consumers (the
-blocks table IS the FIXTURES.md §3 schema).
+``partition_key`` through ``pipeline.commit_stage``, which counts the
+rows per partition while they are written and appends the lineage, and
+the next stage reads the table back as its input. A killed job resumes
+at (stage, partition) granularity; a stage's output is reusable by
+other consumers (the blocks table IS the FIXTURES.md §3 schema).
 
 Trade-off vs the single-pass pipeline (``pipeline.run_extraction``):
 one extra table write/read plus ONE shuffle (groupBy url for assembly)
@@ -16,7 +17,6 @@ byte-identical output (tested).
 
 from __future__ import annotations
 
-import time
 from typing import Iterator
 
 import pandas as pd
@@ -27,7 +27,7 @@ from .kernels.assemble import spans_from_flags
 from .kernels.classify import classify_blocks
 from .kernels.htmlblocks import Block
 from .kernels.langid import detect_lang
-from .lineage import append_lineage, prune_done, with_partition_key
+from .lineage import done_counts, with_partition_key
 from .operators.extract import (
     EXTRACTED_SCHEMA,
     _spans_records,
@@ -256,74 +256,51 @@ def run_staged_extraction(
     n_buckets: int = 64,
 ) -> dict:
     """documents -> blocks table -> extracted table, with per-stage
-    lineage + resume."""
+    lineage + resume. Each stage write is one ``pipeline.commit_stage``
+    over its todo keys: every todo key, an empty bucket included, logs
+    one done-row with counters observed during the write."""
+    from .pipeline import commit_stage
+
     lineage_dir = lineage_dir or f"{work_dir}/lineage"
     blocks_dir = f"{work_dir}/blocks"
     out_dir = f"{work_dir}/extracted"
-    stats: dict = {}
+    pk = F.col("partition_key")
 
-    # ---- stage 1: tokenize -> blocks checkpoint ----
-    keyed = with_partition_key(docs, n_buckets)
-    todo = keyed
-    if resume:
-        todo, pruned = prune_done(keyed, spark, lineage_dir, STAGE_TOKENIZE)
-        stats["tokenize_pruned"] = pruned
-    t0 = time.monotonic()
-    blocks = with_partition_key(
-        tokenize_to_blocks(todo.select("url", "html")), n_buckets
-    )
-    merge_by_key(blocks, blocks_dir)
-    wall1 = int((time.monotonic() - t0) * 1000)
-    written = read_stage(spark, blocks_dir, BLOCKS_SCHEMA + ", partition_key int")
-    per_key = written.filter(F.col("block_id") == -1).groupBy(
-        "partition_key"
-    ).agg(
-        F.count("*").alias("n_rows"),
-        F.sum((F.col("kind") == "error").cast("long")).alias("n_errors"),
-    )
-    if resume:
-        from .lineage import done_keys
-
-        done = done_keys(spark, lineage_dir, STAGE_TOKENIZE)
-        if done is not None:
-            per_key = per_key.join(F.broadcast(done), "partition_key", "left_anti")
-    if per_key.count() > 0:
-        append_lineage(spark, lineage_dir, STAGE_TOKENIZE, per_key, wall1)
-
-    # ---- stage 2: blocks -> extracted ----
-    blocks_in = read_stage(spark, blocks_dir, BLOCKS_SCHEMA + ", partition_key int")
-    todo2 = blocks_in
-    if resume:
-        todo2, pruned2 = prune_done(blocks_in, spark, lineage_dir, STAGE_ASSEMBLE)
-        stats["assemble_pruned"] = pruned2
-    t0 = time.monotonic()
-    extracted = with_partition_key(assemble_from_blocks(todo2), n_buckets)
-    merge_by_key(extracted, out_dir)
-    wall2 = int((time.monotonic() - t0) * 1000)
-    ext = read_stage(spark, out_dir, EXTRACTED_SCHEMA + ", partition_key int")
-    per_key2 = ext.groupBy("partition_key").agg(
-        F.count("*").alias("n_rows"),
-        F.sum((F.col("status") == "error").cast("long")).alias("n_errors"),
-    )
-    if resume:
-        from .lineage import done_keys
-
-        done2 = done_keys(spark, lineage_dir, STAGE_ASSEMBLE)
-        if done2 is not None:
-            per_key2 = per_key2.join(
-                F.broadcast(done2), "partition_key", "left_anti"
+    def run_stage(stage, source, body, target, key, errors):
+        # resume drops the done keys' rows; returns (keys pruned, rows
+        # of the stage's whole output, keys committed now)
+        done = done_counts(spark, lineage_dir, stage) if resume else {}
+        keys = [k for k in range(n_buckets) if k not in done]
+        todo = source.filter(~pk.isin(*done)) if done else source
+        rows = []
+        if keys:
+            rows, _ = commit_stage(
+                spark, stage,
+                lambda: with_partition_key(body(todo), n_buckets),
+                lambda df: merge_by_key(df, target),
+                keys, key=key, errors=errors, lineage_dir=lineage_dir,
             )
-    n_new = per_key2.count()
-    if n_new > 0:
-        append_lineage(spark, lineage_dir, STAGE_ASSEMBLE, per_key2, wall2)
+        return len(done), sum(done.values()) + sum(r[1] for r in rows), len(rows)
 
-    stats.update(
-        {
-            "blocks_dir": blocks_dir,
-            "out_dir": out_dir,
-            "lineage_dir": lineage_dir,
-            "n_docs": ext.count(),
-            "assemble_partitions_new": n_new,
-        }
+    # stage 1: tokenize -> blocks checkpoint; a document is its sentinel
+    # row (block_id = -1), so only those rows carry a lineage key
+    tok_pruned, _, _ = run_stage(
+        STAGE_TOKENIZE, with_partition_key(docs, n_buckets),
+        lambda d: tokenize_to_blocks(d.select("url", "html")), blocks_dir,
+        F.when(F.col("block_id") == -1, pk), F.col("kind") == "error",
     )
-    return stats
+    # stage 2: blocks -> extracted
+    blocks_in = read_stage(spark, blocks_dir, BLOCKS_SCHEMA + ", partition_key int")
+    asm_pruned, n_docs, n_new = run_stage(
+        STAGE_ASSEMBLE, blocks_in, assemble_from_blocks, out_dir, pk,
+        F.col("status") == "error",
+    )
+    return {
+        "tokenize_pruned": tok_pruned,
+        "assemble_pruned": asm_pruned,
+        "blocks_dir": blocks_dir,
+        "out_dir": out_dir,
+        "lineage_dir": lineage_dir,
+        "n_docs": n_docs,
+        "assemble_partitions_new": n_new,
+    }

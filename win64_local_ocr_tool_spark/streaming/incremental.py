@@ -23,9 +23,11 @@ Design notes for cluster scale:
   file listing is the bottleneck — a production deployment points this
   at an Iceberg table with incremental snapshot reads instead, same
   foreachBatch body.
-- **Lineage:** every epoch appends (stage='stream_extract',
-  partition_key=epoch_id) counter rows to the same lineage table as the
-  batch job, so monitoring is uniform.
+- **Lineage:** every epoch commits through ``pipeline.commit_stage``
+  like the batch job: one (stage='stream_extract', partition_key=
+  epoch_id) row with n_rows, n_errors and the content fingerprint
+  observed during the epoch's write, and that write's wall time, in
+  the same lineage table, so monitoring is uniform.
 """
 
 from __future__ import annotations
@@ -65,7 +67,8 @@ def incremental_extraction(
     Within-epoch duplicates pass through 1:1 either way, matching the
     batch pipeline's explicit-dedup-operator stance.
     """
-    from ..lineage import append_lineage
+    from ..lineage import done_counts
+    from ..pipeline import commit_stage
 
     reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
     if max_files_per_trigger is not None:
@@ -73,11 +76,19 @@ def incremental_extraction(
     stream = reader.parquet(input_dir)
 
     def process_epoch(batch: DataFrame, epoch_id: int) -> None:
+        bspark = batch.sparkSession
+        # crash-replay guard: foreachBatch is at-least-once, and an
+        # epoch's done-row is appended only after its write finished, so
+        # a logged epoch is complete — skip its write and its
+        # (non-idempotent) lineage append
+        if lineage_dir and int(epoch_id) in done_counts(
+            bspark, lineage_dir, STAGE_STREAM
+        ):
+            return
         docs = batch.select("url", "html")
         if skip_seen_urls:
             from pyspark.errors import AnalysisException
 
-            bspark = batch.sparkSession
             try:
                 # exclude this epoch's own directory: a crash-replay of
                 # epoch N must not be masked by its partial prior write
@@ -91,34 +102,13 @@ def incremental_extraction(
                 docs = docs.join(seen, "url", "left_anti")
             except AnalysisException:
                 pass  # first epoch: nothing written yet
-        ext = extract_all(docs, mega_bytes=mega_bytes)
-        # overwrite-by-epoch = idempotent replay (see module docstring)
-        ext.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
-        if lineage_dir:
-            from ..lineage import done_keys
-
-            bspark = batch.sparkSession
-            # crash-replay guard: foreachBatch is at-least-once, and the
-            # data write is idempotent (overwrite-by-epoch) but a lineage
-            # APPEND is not — skip epochs already logged, mirroring the
-            # batch path's done_keys anti-join
-            done = done_keys(bspark, lineage_dir, STAGE_STREAM)
-            if done is not None and any(
-                r["partition_key"] == int(epoch_id) for r in done.collect()
-            ):
-                return
-            written = bspark.read.parquet(f"{out_dir}/epoch={epoch_id}")
-            counts = written.agg(
-                F.count("*").alias("n_rows"),
-                F.sum((F.col("status") == "error").cast("long")).alias(
-                    "n_errors"
-                ),
-            ).collect()[0]
-            per_key = bspark.createDataFrame(
-                [(int(epoch_id), counts["n_rows"], counts["n_errors"] or 0)],
-                schema="partition_key int, n_rows long, n_errors long",
-            )
-            append_lineage(bspark, lineage_dir, STAGE_STREAM, per_key, 0)
+        commit_stage(
+            bspark, STAGE_STREAM, lambda: extract_all(docs, mega_bytes=mega_bytes),
+            # overwrite-by-epoch = idempotent replay (see module docstring)
+            lambda df: df.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}"),
+            [int(epoch_id)], key=F.lit(int(epoch_id)),
+            errors=F.col("status") == "error", lineage_dir=lineage_dir,
+        )
 
     q = (
         stream.writeStream.foreachBatch(process_epoch)

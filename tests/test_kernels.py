@@ -164,8 +164,10 @@ def test_span_offsets_slice_text():
 
 
 def test_lang_counts_fast_path_equals_reference_walk():
-    """The ASCII Counter fast path must produce exactly the counts of
-    the naive per-token walk, for arbitrary ascii and mixed inputs."""
+    """Both counting paths (ASCII [a-z]+ over the lowered text, and the
+    per-whitespace-piece counts otherwise) must produce exactly the
+    counts of the naive per-token walk, including pieces that hold
+    several tokens, Unicode whitespace and case-fold characters."""
     from hypothesis import given, settings, strategies as st
 
     from win64_local_ocr_tool_spark.kernels import langid as L
@@ -190,8 +192,23 @@ def test_lang_counts_fast_path_equals_reference_walk():
 
     words = st.sampled_from(
         "the und cat der of hund xyz है और अस्ति इति on ist".split()
+        # case-fold characters whose lowering changes the token shape
+        + ["The", "DER", "İ", "İstanbul", "ß", "STRASSE", "ﬁ", "ﬁnd", "ꭵ"]
     )
-    texts = st.lists(words, max_size=30).map(" ".join)
+    # glue makes one whitespace piece hold several tokens, or none
+    glue = st.sampled_from(["", ",", "।", "1", "_", "-", "'", "x1"])
+    pieces = st.lists(st.tuples(words, glue), min_size=1, max_size=4).map(
+        lambda wg: "".join(w + g for w, g in wg)
+    )
+    seps = st.sampled_from([" ", "\u00a0", "\u2009", "\t", "\n", "\x1f", "  "])
+    texts = st.one_of(
+        st.lists(words, max_size=30).map(" ".join),
+        st.lists(st.tuples(pieces, seps), max_size=30).map(
+            lambda ps: "".join(p + s for p, s in ps)
+        ),
+        st.lists(st.sampled_from(["the", "of", "x1the_the", "The,der", "and"]),
+                 max_size=30).map(" ".join),
+    )
 
     @settings(max_examples=200, deadline=None)
     @given(texts)
@@ -200,6 +217,11 @@ def test_lang_counts_fast_path_equals_reference_walk():
 
     check()
 
-    # adversarial non-ascii case-fold chars must route to the walk path
-    for t in ("İstanbul the the", "STRASSE ß und und", "ꭵ the"):
+    for t in (
+        # non-ascii case-fold chars route to the per-piece path
+        "İstanbul the the", "STRASSE ß und und", "ꭵ the", "ﬁ the\u00a0the",
+        # pieces holding several tokens, repeated pieces, mixed scripts
+        "the,der the,der", "है।और है।और है", "x1the_the x1the_the",
+        "हैthe theहै\u2009हैthe", "und\x1fund\tder\nder",
+    ):
         assert L.lang_counts(t) == reference(t)

@@ -19,6 +19,7 @@ def test_sniffers():
     assert sniff_container(b"\x89PNG\r\n\x1a\nxxxx") == "png"
     assert sniff_container(b"\xff\xd8\xffxxx") == "jpeg"
     assert sniff_container(b"RIFF....WAVEfmt") == "wav"
+    assert sniff_container(b"RIFF....WEBPVP8 ") == "webp"
     assert sniff_container(b"RIFF....AVI LIST") == "unknown"
     assert sniff_container(b"junk") == "unknown"
 
@@ -81,6 +82,23 @@ def test_media_metadata_no_codec_status(spark):
         == (32, 16, 3)
     assert (rows[5]["status"], rows[5]["container"]) == ("ok", "jpeg")
     assert (rows[5]["width"], rows[5]["height"]) == (24, 16)
+
+
+def test_webp_is_a_typed_no_codec_image(spark):
+    """WebP sniffs as an image container without a codec: the decoding
+    operators give typed no_codec image rows, never 'unknown'/error."""
+    from win64_local_ocr_tool_spark.operators.multimodal import media_resize
+
+    webp = b"RIFF\x1a\x00\x00\x00WEBPVP8L\x0e\x00\x00\x00/\x00\x00\x00"
+    df = spark.createDataFrame([(1, webp)], "media_id long, payload binary")
+    meta = media_metadata(df).collect()[0]
+    assert (meta["container"], meta["kind"], meta["status"]) == (
+        "webp", "image", "no_codec"
+    )
+    assert meta["n_bytes"] == len(webp)
+    assert media_resize(df, 8, 8).collect()[0]["status"] == "no_codec"
+    feat = media_features(df).collect()[0]
+    assert (feat["kind"], feat["status"]) == ("image", "ok")
 
 
 def test_media_features_deterministic_across_partitioning(spark):

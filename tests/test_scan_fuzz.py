@@ -4,7 +4,8 @@ just the corpus shapes (tests/test_kernels.py covers those).
 
 The generator produces the HTML constructs the engine supports:
 nested block tags, anchors, skip-tag bodies (script/style), comments,
-declarations, entities, void tags, and multilingual text.
+declarations, entities, void tags, self-closing `/>` tags, and
+multilingual text.
 """
 
 from hypothesis import given, settings, strategies as st
@@ -26,11 +27,21 @@ _entity_text = st.sampled_from(
 
 _block_tag = st.sampled_from(["p", "div", "td", "li", "h1", "blockquote"])
 
+# `/>` forms: HTMLParser reads `<x …/>` as a start plus an end tag only
+# when the `/` is not part of an unquoted attribute value
+_self_closing = st.sampled_from(
+    [
+        "<br/>", "<div/>", "<td/>", '<p class="c"/>', '<a id="t" />',
+        "<a href=x/>", "<a b=/>", '<script src="a.js"/>', "<STYLE/>",
+        "<noscript/>", '<script type="t" / >var y;</script>', "<span/>",
+    ]
+)
+
 
 @st.composite
 def fragments(draw, depth=0):
     kind = draw(
-        st.integers(0, 6 if depth < 3 else 3)
+        st.integers(0, 7 if depth < 3 else 3)
     )
     if kind == 0:
         return draw(_text)
@@ -48,6 +59,8 @@ def fragments(draw, depth=0):
         return f"<{tag}>{inner}</{tag}>"
     if kind == 5:
         return f"<script>var x = '{draw(_text)}';</script>"
+    if kind == 6:
+        return draw(_self_closing) + draw(_text)
     return f"<br>{draw(_text)}<hr>"
 
 
@@ -87,13 +100,42 @@ ADVERSARIAL = [
     b'<body><noscript><a href="/x">link</a></noscript><p>v</p></body>',
     b"<body><NOSCRIPT>hide</NOSCRIPT><p>v</p></body>",
     b"<body><noscript><script>x</script>hide</noscript><p>v</p></body>",
+    # a stray close tag of a CDATA element moves the shared skip depth
+    b"<body><noscript></script>shown</noscript><p>v</p></body>",
+    b"<body><noscript></STYLE>shown</noscript><p>v</p></body>",
+    # CDATA elements consumed whole by the split pattern
+    b"<body><scriptx>text</scriptx><p>v</p></body>",
+    b"<body><Script>var a = 1;</SCRIPT ><p>v</p></body>",
+    b"<body><script>a <!-- b </p> c </scriptfoo> d</script><p>v</p></body>",
+    b"<body><noscript><style>p{}</style>hidden</noscript><p>v</p></body>",
+    b"<body><p>v</p><style>p{color:red}",
+    # self-closing start tags: a start plus an end
+    b'<body><script src="a.js"/><p>after script</p><p>two</p></body>',
+    b"<body><STYLE/><p>after style</p></body>",
+    b"<body><noscript/><p>after noscript</p></body>",
+    b'<body><p>see <a id="t" /> the long text of this block here</p></body>',
+    b"<body><div/><p>x</p><div><p>y</p></div></body>",
+    b"<body><table><tr><td/><td>cell</td></tr></table><p>z</p></body>",
+    b"<body><br/>a<hr/>b<p/>c</body>",
+    b'<body><div a="1"/><p>x</p></body>',
+    b"<body><a b='c'd/>x<p>y</p></body>",
+    # ... but not when the `/` belongs to an unquoted value, or when
+    # anything but whitespace-free `/>` ends the tag
+    b"<body><p><a href=x/>link text</a> more words in the para</p><p>q</p></body>",
+    b"<body><a b=/>x</a><p>y</p></body>",
+    b"<body><a b= />x</a><p>y</p></body>",
+    b'<body><script type="t" / >var a;</script><p>after</p></body>',
+    b"<body><p/ >x</p></body>",
+    b"</p/>x",
+    b'<body><p a=x"y>text</p><p class="z">w</p></body>',
 ]
 
 
 def test_scanner_matches_htmlparser_adversarial():
     """Quoted '>' in attributes, mixed-case tags, unclosed tags, stray
     '<' in text, script bodies with comparisons, nested anchors,
-    doctype, implicit li closure."""
+    doctype, implicit li closure, CDATA element edges, self-closing
+    tags."""
     for payload in ADVERSARIAL:
         assert scan_html(payload) == tokenize_html(payload), payload
 

@@ -7,7 +7,10 @@ Devanagari byte-identity.
 
 Counts are additive across document chunks, so the mega-page skew path
 can sum per-chunk counts and apply ``lang_from_counts`` once per document
-with a result identical to the single-process path.
+with a result identical to the single-process path. They are additive
+across whitespace pieces too: no token spans whitespace (whitespace is
+never a letter, and U+0900-U+097F holds none), so ``lang_counts`` counts
+each distinct piece of a document once, weighted by its occurrences.
 """
 
 from __future__ import annotations
@@ -15,8 +18,8 @@ from __future__ import annotations
 import re
 from collections import Counter
 
-# Marker stopwords per language. Matching is on whitespace-delimited
-# tokens, lowercased for Latin scripts.
+# Marker stopwords per language. Matching is on _TOKEN tokens,
+# lowercased for Latin scripts.
 EN_MARKERS = frozenset("the and of to is in that with for on".split())
 DE_MARKERS = frozenset("der die und das ist ein mit von zu nicht".split())
 HI_MARKERS = frozenset("है और में की का से पर यह लिए हैं".split())
@@ -36,47 +39,51 @@ _DEVA = re.compile(r"[ऀ-ॿ]")
 # runs never give back, so the pattern stays linear under any
 # composition (same fix as htmlscan.py).
 _TOKEN = re.compile(r"(?:[^\W\d_]++|[ऀ-ॿ]++)+", re.UNICODE)
+_ASCII_WORD = re.compile(r"[a-z]+")
 
 COUNT_FIELDS = ("n_en", "n_de", "n_hi", "n_sa", "n_deva", "n_tokens")
 
 
 def lang_counts(text: str) -> tuple[int, int, int, int, int, int]:
-    """Marker counts for ``text``: (en, de, hi, sa, devanagari-tokens, tokens)."""
-    n_en = n_de = n_hi = n_sa = n_deva = n_tok = 0
-    # one whole-text precheck spares the per-token Devanagari scan on
-    # pure-Latin documents (half the corpus)
-    has_deva = _DEVA.search(text) is not None
-    if not has_deva and text.isascii():
-        # ASCII fast path: no per-token Python loop. For ASCII input,
-        # str.lower() is a 1:1 letter-preserving map, so tokenizing the
-        # pre-lowercased text yields exactly the token multiset of
-        # lowercasing each token (NOT true in general: 'İ'.lower()
-        # inserts a combining mark and splits a token — hence the
-        # isascii() gate). Counter counts in C; EN/DE marker sets are
-        # disjoint, so summing lookups equals the if/elif walk.
-        toks = _TOKEN.findall(text.lower())
+    """Marker counts for ``text``: (en, de, hi, sa, devanagari-tokens, tokens).
+
+    Exactly the counts of a walk over ``_TOKEN.findall(text)``
+    (Devanagari tokens against hi/sa, the others lowercased against
+    en/de). Each distinct whitespace piece is tokenized once and its
+    counts weighted by its occurrences: exact, because no token spans
+    whitespace (whitespace is never a letter, and U+0900-U+097F holds
+    none).
+    """
+    if text.isascii():
+        # On ASCII text str.lower() maps letters 1:1, so [a-z]+ on the
+        # lowered text yields exactly the lowered _TOKEN tokens (NOT
+        # true in general: 'İ'.lower() inserts a combining mark and
+        # splits a token). EN/DE marker sets are disjoint, so summing
+        # Counter lookups equals the if/elif walk.
+        toks = _ASCII_WORD.findall(text.lower())
         c = Counter(toks)
-        n_tok = len(toks)
-        n_en = sum(c[m] for m in EN_MARKERS)
-        n_de = sum(c[m] for m in DE_MARKERS)
-        return (n_en, n_de, 0, 0, 0, n_tok)
-    # walk path (non-ASCII input): keep the has_deva short-circuit so a
-    # Latin document with umlauts never pays a per-token Devanagari scan
-    deva_search = _DEVA.search
-    for tok in _TOKEN.findall(text):
-        n_tok += 1
-        if has_deva and deva_search(tok):
-            n_deva += 1
-            if tok in HI_MARKERS:
-                n_hi += 1
-            elif tok in SA_MARKERS:
-                n_sa += 1
-        else:
-            low = tok.lower()
-            if low in EN_MARKERS:
-                n_en += 1
-            elif low in DE_MARKERS:
-                n_de += 1
+        return (sum(c[m] for m in EN_MARKERS), sum(c[m] for m in DE_MARKERS),
+                0, 0, 0, len(toks))
+    n_en = n_de = n_hi = n_sa = n_deva = n_tok = 0
+    # the whole-text precheck spares a Latin document with umlauts the
+    # per-token Devanagari test
+    has_deva = _DEVA.search(text) is not None
+    deva_search, tokens = _DEVA.search, _TOKEN.findall
+    for piece, k in Counter(text.split()).items():
+        for tok in tokens(piece):
+            n_tok += k
+            if has_deva and deva_search(tok):
+                n_deva += k
+                if tok in HI_MARKERS:
+                    n_hi += k
+                elif tok in SA_MARKERS:
+                    n_sa += k
+            else:
+                low = tok.lower()
+                if low in EN_MARKERS:
+                    n_en += k
+                elif low in DE_MARKERS:
+                    n_de += k
     return (n_en, n_de, n_hi, n_sa, n_deva, n_tok)
 
 

@@ -111,30 +111,6 @@ def extract_normal(docs: DataFrame) -> DataFrame:
 # mega path: tokenize -> chunk -> classify -> relational reassembly
 # --------------------------------------------------------------------------
 
-def _block_rec(b: Block) -> dict:
-    return {
-        "block_id": b.block_id,
-        "tag": b.tag,
-        "depth": b.depth,
-        "pos": b.pos,
-        "text": b.text,
-        "text_len": b.text_len,
-        "link_text_len": b.link_text_len,
-    }
-
-
-def _rec_block(r) -> Block:
-    return Block(
-        block_id=int(r["block_id"]),
-        tag=r["tag"],
-        depth=int(r["depth"]),
-        pos=int(r["pos"]),
-        text=r["text"],
-        text_len=int(r["text_len"]),
-        link_text_len=int(r["link_text_len"]),
-    )
-
-
 def make_chunker(chunk_blocks: int):
     def tokenize_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -143,7 +119,7 @@ def make_chunker(chunk_blocks: int):
                 kind, blocks = tokenize_payload(
                     b"" if payload is None else bytes(payload)
                 )
-                recs = [_block_rec(b) for b in blocks]
+                recs = [b._asdict() for b in blocks]
                 if kind != "html":
                     # PDF/corrupt payloads are never block-split: one chunk.
                     rows.append(
@@ -205,14 +181,14 @@ def classify_chunk_batches(
             pdf["right_halo"].tolist(),
         )
         for url, chunk_id, kind, block_recs, lh_rec, rh_rec in zip(*cols):
-            blocks = [_rec_block(br) for br in block_recs]
+            blocks = [Block(**br) for br in block_recs]
             if kind == "pdf":
                 flags = [True] * len(blocks)
             elif kind == "error":
                 flags = [False] * len(blocks)
             else:
-                lh = _rec_block(lh_rec) if lh_rec is not None else None
-                rh = _rec_block(rh_rec) if rh_rec is not None else None
+                lh = Block(**lh_rec) if lh_rec is not None else None
+                rh = Block(**rh_rec) if rh_rec is not None else None
                 flags = classify_chunk(blocks, lh, rh)
             text, spans = spans_from_flags(blocks, flags)
             counts = lang_counts(text)

@@ -13,8 +13,8 @@ BI_RLE8/BI_RLE4 + standard 555/565 bitfields,
 audio payload — yields typed METADATA rows from a real frame-header
 walk (``kernels/mp3meta.py``: version/layer/rate/channels/duration/
 VBR-average bitrate) while its payload bits stay undecoded; variants
-needing a real codec (arithmetic/12-bit/lossless JPEG, nonstandard BMP
-bitfield masks, free-format MP3, full compressed-audio decode) remain
+needing a real codec (WebP, arithmetic/12-bit/lossless JPEG, nonstandard
+BMP bitfield masks, free-format MP3, full compressed-audio decode) remain
 the documented ``no_codec`` boundary (a real deployment swaps the
 ``_decode_image`` / ``_decode_audio`` internals for PIL/ffmpeg).
 Everything Spark-side is real and tested: schemas, metadata sniffing,
@@ -23,8 +23,8 @@ Arrow batch shapes, partitioning, and the iterator-UDF init pattern
 ``segment_graph.py:73-76``).
 
 Payload containers are sniffed from magic bytes (PNG/JPEG/GIF/BMP/WAV,
-plus the reference-style fake used by the synthetic corpus), never from
-file extensions — the reference normalizes uploads the same way
+WebP, plus the reference-style fake used by the synthetic corpus), never
+from file extensions — the reference normalizes uploads the same way
 (``routes.py:63-81``).
 """
 
@@ -56,19 +56,23 @@ _MAGICS = [
     (b"GIF89a", "gif"),
     (b"BM", "bmp"),  # weak 2-byte magic; DIB-size sanity check below
     (b"RIFF", "wav"),  # + b"WAVE" at offset 8
+    (b"RIFF", "webp"),  # + b"WEBP" at offset 8; sniffed, never decoded
     (b"%SIMG", "simg"),  # synthetic fixture image (tests)
     (b"%SAUD", "saud"),  # synthetic fixture audio (tests)
     (b"%SVID", "svid"),  # synthetic fixture video (tests)
 ]
 
 
-_IMAGE_CONTAINERS = ("png", "jpeg", "gif", "bmp", "simg")
+# webp has no codec here: its image rows are typed status='no_codec'
+_IMAGE_CONTAINERS = ("png", "jpeg", "gif", "bmp", "webp", "simg")
+# RIFF form type at offset 8, per RIFF container
+_RIFF_FORMS = {"wav": b"WAVE", "webp": b"WEBP"}
 
 
 def sniff_container(payload: bytes) -> str:
     for magic, name in _MAGICS:
         if payload.startswith(magic):
-            if name == "wav" and payload[8:12] != b"WAVE":
+            if name in _RIFF_FORMS and payload[8:12] != _RIFF_FORMS[name]:
                 continue
             if name == "bmp" and (
                 len(payload) < 54

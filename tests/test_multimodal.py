@@ -101,6 +101,26 @@ def test_webp_is_a_typed_no_codec_image(spark):
     assert (feat["kind"], feat["status"]) == ("image", "ok")
 
 
+def test_media_features_kind_matches_metadata(spark):
+    """Video containers (mp4, svid) give video feature rows, the kind
+    media_metadata gives them, not audio."""
+    from win64_local_ocr_tool_spark.kernels.mp4meta import encode_mp4
+    from win64_local_ocr_tool_spark.operators.multimodal import render_svid
+
+    payloads = [
+        encode_mp4(width=96, height=54, duration_ms=777),
+        render_svid(16, 8, 3, 1),
+        render_saud(8000, 100, 1),
+        render_simg(8, 8, 3, 1),
+    ]
+    df = spark.createDataFrame(
+        list(enumerate(payloads)), "media_id long, payload binary"
+    )
+    feats = {r["media_id"]: r["kind"] for r in media_features(df).collect()}
+    meta = {r["media_id"]: r["kind"] for r in media_metadata(df).collect()}
+    assert feats == meta == {0: "video", 1: "video", 2: "audio", 3: "image"}
+
+
 def test_media_features_deterministic_across_partitioning(spark):
     a = media_features(synthetic_media_df(spark, 60)).toPandas()
     b = media_features(

@@ -105,23 +105,14 @@ def test_straggler_report_finds_planted_fat_partition(spark, tmp_path):
     lin_dir = str(tmp_path / "lineage")
     # run 1: 15 uniform partitions (100 rows) + one fat one (5000 rows)
     rows = [(k, 100, 0) for k in range(15)] + [(15, 5000, 2)]
-    counts = spark.createDataFrame(
-        rows, schema="partition_key int, n_rows long, n_errors long"
-    )
-    append_lineage(spark, lin_dir, "extract", counts, wall_ms=1234)
+    append_lineage(lin_dir, "extract", rows, wall_ms=1234)
     # run 2 (resume): re-logs key 3 with a DIFFERENT count — the report
     # must use this latest row, not double-count
     time.sleep(0.01)
-    again = spark.createDataFrame(
-        [(3, 120, 0)], schema="partition_key int, n_rows long, n_errors long"
-    )
-    append_lineage(spark, lin_dir, "extract", again, wall_ms=99)
+    append_lineage(lin_dir, "extract", [(3, 120, 0)], wall_ms=99)
     # an unrelated stage with its own (non-straggling) profile
-    other = spark.createDataFrame(
-        [(k, 50, 0) for k in range(4)],
-        schema="partition_key int, n_rows long, n_errors long",
-    )
-    append_lineage(spark, lin_dir, "curate_exact", other, wall_ms=5)
+    other = [(k, 50, 0) for k in range(4)]
+    append_lineage(lin_dir, "curate_exact", other, wall_ms=5)
 
     rep = straggler_report(read_lineage(spark, lin_dir), top_k=3).collect()
     by_stage = {}
@@ -149,11 +140,8 @@ def test_straggler_report_deterministic_under_ts_ties(spark, tmp_path):
     )
 
     lin_dir = str(tmp_path / "lin")
-    counts = spark.createDataFrame(
-        [(3, 10, 0), (3, 999, 0), (1, 5, 0), (2, 7, 0)],
-        "partition_key int, n_rows long, n_errors long",
-    )
-    append_lineage(spark, lin_dir, "extract", counts, wall_ms=50)
+    counts = [(3, 10, 0), (3, 999, 0), (1, 5, 0), (2, 7, 0)]
+    append_lineage(lin_dir, "extract", counts, wall_ms=50)
     for _ in range(3):
         rep = {
             r["partition_key"]: r
@@ -238,11 +226,8 @@ def test_straggler_keys_from_lineage_report(spark, tmp_path):
     )
 
     lin_dir = str(tmp_path / "lin")
-    counts = spark.createDataFrame(
-        [(k, 5000 if k == 3 else 50, 0) for k in range(8)],
-        "partition_key int, n_rows long, n_errors long",
-    )
-    append_lineage(spark, lin_dir, "extract", counts, wall_ms=10)
+    counts = [(k, 5000 if k == 3 else 50, 0) for k in range(8)]
+    append_lineage(lin_dir, "extract", counts, wall_ms=10)
     assert STRAGGLER_X1000 == 10_000  # 5000 vs p50=50 -> 100x -> flagged
     assert _straggler_keys(spark, lin_dir, {}) == {3}
     assert _straggler_keys(spark, None, {}) == set()
@@ -304,12 +289,8 @@ def test_read_lineage_mixed_fp_vintage(spark, tmp_path):
     })
     # sorts before the appended part files, whose footers carry fp
     pq.write_table(old, str(lin / "part-0000-old.parquet"))
-    counts = spark.createDataFrame(
-        [(0, 10, 0, 123)],
-        "partition_key int, n_rows long, n_errors long, fp long",
-    )
     append_lineage(
-        spark, str(lin), "curate_exact", counts, wall_ms=7, run_id="new"
+        str(lin), "curate_exact", [(0, 10, 0, 123)], wall_ms=7, run_id="new"
     )
     for _ in range(3):
         got = {

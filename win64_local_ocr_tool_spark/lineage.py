@@ -9,25 +9,49 @@ restarted job drops the done keys' rows and recomputes only the missing
 partitions.
 
 Sandbox note: the runtime has no Iceberg catalog jars, so the checkpoint
-table is parquet-append with the same semantics (append-only; readers
-take the union of runs; a partition is "done" iff any run logged it
-done). Stage OUTPUT idempotence comes from dynamic partition overwrite
-keyed by the deterministic ``partition_key`` (the analog of the
-reference's rm-then-rewrite per page, ``segment_from_point_clusters.py:
-372-373``) — re-running a partition replaces exactly its directory.
+table is a directory of parquet files with the same semantics
+(append-only; readers take the union of runs; a partition is "done" iff
+any run logged it done). A commit's 1-16 rows are written on the driver
+with pyarrow (``append_lineage``: a hidden temporary file renamed into
+place, so a reader never sees half a file), not as a Spark job; the
+resume paths read them back on the driver too (``read_done``), and
+``read_lineage`` is the Spark reader for ``straggler_report``. Stage
+OUTPUT idempotence comes from dynamic partition overwrite keyed by the
+deterministic ``partition_key`` (the analog of the reference's
+rm-then-rewrite per page, ``segment_from_point_clusters.py:372-373``) —
+re-running a partition replaces exactly its directory.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
+import urllib.parse
 import uuid
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-LINEAGE_SCHEMA = (
-    "stage string, partition_key int, n_rows long, n_errors long, "
-    "wall_ms long, status string, run_id string, ts timestamp, fp long"
-)
+# The lineage table's one schema. ``ts`` is UTC microseconds: Spark
+# reads it as its timestamp, and a Spark-written INT96 ``ts`` (read by
+# Arrow as naive nanoseconds, UTC by Spark's convention) casts to it, so
+# rows of both writers order correctly against each other.
+LINEAGE_ARROW = pa.schema([
+    ("stage", pa.string()),
+    ("partition_key", pa.int32()),
+    ("n_rows", pa.int64()),
+    ("n_errors", pa.int64()),
+    ("wall_ms", pa.int64()),
+    ("status", pa.string()),
+    ("run_id", pa.string()),
+    ("ts", pa.timestamp("us", tz="UTC")),
+    ("fp", pa.int64()),
+])
+LINEAGE_SCHEMA = from_arrow_schema(LINEAGE_ARROW)
 
 
 def with_partition_key(df: DataFrame, n_buckets: int, key: str = "url") -> DataFrame:
@@ -43,40 +67,66 @@ def with_partition_key(df: DataFrame, n_buckets: int, key: str = "url") -> DataF
 
 
 def read_lineage(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
-    if not os.path.isdir(lineage_dir) or not any(
-        f.endswith(".parquet") for f in _walk_files(lineage_dir)
-    ):
+    if _dataset(lineage_dir) is None:
         return None
     # explicit schema: inferred from one footer, a dir mixing pre-``fp``
     # files with ``fp`` files may drop the column; here old rows read NULL
     return spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_dir)
 
 
-def _walk_files(d: str):
-    for root, _dirs, files in os.walk(d):
-        yield from files
+def _filesystem(lineage_dir: str) -> tuple[pafs.FileSystem, str]:
+    # a path without a scheme is local and may be relative (``jobs
+    # --lineage``); from_uri wants it absolute
+    if not urllib.parse.urlparse(lineage_dir).scheme:
+        lineage_dir = os.path.abspath(lineage_dir)
+    return pafs.FileSystem.from_uri(lineage_dir)
+
+
+def _dataset(lineage_dir: str) -> ds.Dataset | None:
+    """The lineage files as one dataset with ``LINEAGE_ARROW``; None when
+    the directory holds none. Hidden names (an append's temporary file,
+    Spark's ``_SUCCESS`` and checksums) are skipped, as Spark skips them."""
+    fs, path = _filesystem(lineage_dir)
+    if fs.get_file_info(path).type != pafs.FileType.Directory:
+        return None
+    data = ds.dataset(path, schema=LINEAGE_ARROW, format="parquet", filesystem=fs)
+    return data if data.files else None
+
+
+def read_done(lineage_dir: str, stage: str | None = None) -> list[dict] | None:
+    """The done-rows of the lineage table (of ``stage`` when given), read
+    on the driver: no Spark job. Reads files of both writers (Spark's and
+    ``append_lineage``'s); a file older than the ``fp`` column reads
+    ``fp`` NULL. None when the directory holds no lineage file."""
+    data = _dataset(lineage_dir)
+    if data is None:
+        return None
+    done = ds.field("status") == "done"
+    if stage is not None:
+        done &= ds.field("stage") == stage
+    return data.to_table(filter=done).to_pylist()
 
 
 def done_keys(spark: SparkSession, lineage_dir: str, stage: str) -> DataFrame | None:
-    lin = read_lineage(spark, lineage_dir)
-    if lin is None:
+    """``stage``'s done partition keys as a one-column DataFrame, from
+    the driver-side read. Built from an Arrow table: a list of rows
+    would make every action on it start Python workers."""
+    rows = read_done(lineage_dir, stage)
+    if rows is None:
         return None
-    return (
-        lin.filter((F.col("stage") == stage) & (F.col("status") == "done"))
-        .select("partition_key")
-        .distinct()
-    )
+    keys = sorted({r["partition_key"] for r in rows})
+    return spark.createDataFrame(pa.table({"partition_key": pa.array(keys, pa.int32())}))
 
 
-def done_counts(spark: SparkSession, lineage_dir: str, stage: str) -> dict[int, int]:
+def done_counts(lineage_dir: str, stage: str) -> dict[int, int]:
     """partition_key -> n_rows of ``stage``'s done-rows, the latest
-    winning; one driver-side collect of the (tiny) lineage table."""
-    lin = read_lineage(spark, lineage_dir)
-    if lin is None:
-        return {}
-    done = lin.filter((F.col("stage") == stage) & (F.col("status") == "done"))
-    rows = done.select("ts", "partition_key", "n_rows").collect()
-    return {k: n for _, k, n in sorted(rows)}
+    winning (a tie on ts goes to the larger n_rows); one driver-side
+    read of the (tiny) lineage table."""
+    rows = sorted(
+        (r["ts"], r["partition_key"], r["n_rows"])
+        for r in read_done(lineage_dir, stage) or ()
+    )
+    return {k: n for _, k, n in rows}
 
 
 def straggler_report(lin: DataFrame, top_k: int = 5) -> DataFrame:
@@ -166,35 +216,44 @@ def content_fingerprint(df: DataFrame) -> int:
 
 
 def append_lineage(
-    spark: SparkSession,
     lineage_dir: str,
     stage: str,
-    per_key_counts: DataFrame,
+    rows: list[tuple],
     wall_ms: int,
     run_id: str | None = None,
 ) -> None:
     """Append one done-row per processed partition_key.
 
-    ``per_key_counts``: DataFrame(partition_key int, n_rows long,
-    n_errors long[, fp long]). ``fp`` is the key's ``content_fingerprint``
-    as ``commit_stage`` observed it during the write; a resume skip path
-    compares it against the on-disk table. Without the column the rows
-    read ``fp`` NULL (count-only validation). ``wall_ms`` is the wall
-    time of the commit's write, copied to every key of the commit
-    (local mode has no per-task clock worth logging).
+    ``rows``: (partition_key, n_rows, n_errors[, fp]) tuples. ``fp`` is
+    the key's ``content_fingerprint`` as ``commit_stage`` observed it
+    during the write; a resume skip path compares it against the on-disk
+    table. Without it the row reads ``fp`` NULL (count-only validation).
+    ``wall_ms`` is the wall time of the commit's write, copied to every
+    key of the commit (local mode has no per-task clock worth logging);
+    every row of one append shares one ``ts``.
+
+    The rows are one Arrow table written on the driver, not a Spark job:
+    the file lands as ``.part-<uuid>.parquet.tmp`` (every reader skips a
+    leading ``.``) and is then renamed to ``part-<uuid>.parquet``. So
+    the commit marker exists only after the stage's write returned, and
+    no reader sees half a file. The path goes through
+    ``pyarrow.fs.FileSystem.from_uri``, so one code path serves local
+    paths and object-store URIs; only the local file system is tested.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    if "fp" not in per_key_counts.columns:
-        per_key_counts = per_key_counts.withColumn("fp", F.lit(None))
-    rows = (
-        per_key_counts.withColumn("stage", F.lit(stage))
-        .withColumn("wall_ms", F.lit(wall_ms).cast("long"))
-        .withColumn("status", F.lit("done"))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("ts", F.current_timestamp())
-        .select(
-            "stage", "partition_key", "n_rows", "n_errors",
-            "wall_ms", "status", "run_id", "ts", F.col("fp").cast("long"),
-        )
+    ts = datetime.datetime.now(datetime.timezone.utc)
+    table = pa.Table.from_pylist(
+        [
+            {"stage": stage, "partition_key": k, "n_rows": n, "n_errors": e,
+             "wall_ms": wall_ms, "status": "done", "run_id": run_id, "ts": ts,
+             "fp": fp[0] if fp else None}
+            for k, n, e, *fp in rows
+        ],
+        schema=LINEAGE_ARROW,
     )
-    rows.write.mode("append").parquet(lineage_dir)
+    fs, path = _filesystem(lineage_dir)
+    fs.create_dir(path, recursive=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = f"{path}/.{name}.tmp"
+    pq.write_table(table, tmp, filesystem=fs)
+    fs.move(tmp, f"{path}/{name}")

@@ -65,6 +65,7 @@ _MAGICS = [
 
 # webp has no codec here: its image rows are typed status='no_codec'
 _IMAGE_CONTAINERS = ("png", "jpeg", "gif", "bmp", "webp", "simg")
+_VIDEO_CONTAINERS = ("mp4", "svid")
 # RIFF form type at offset 8, per RIFF container
 _RIFF_FORMS = {"wav": b"WAVE", "webp": b"WEBP"}
 
@@ -489,7 +490,12 @@ def media_features(media: DataFrame, *, dim: int = 8) -> DataFrame:
                          "status": "error", "feat": None}
                     )
                     continue
-                kind = "image" if container in _IMAGE_CONTAINERS else "audio"
+                # the kind media_metadata gives the container
+                kind = (
+                    "image" if container in _IMAGE_CONTAINERS
+                    else "video" if container in _VIDEO_CONTAINERS
+                    else "audio"
+                )
                 hist = np.bincount(
                     np.frombuffer(payload[5:4101], dtype=np.uint8), minlength=256
                 ).astype(np.float64)

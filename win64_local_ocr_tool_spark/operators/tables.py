@@ -1,6 +1,6 @@
-"""Test-table registration: the driver's TPC-H-ish parquet as temp views.
+"""Test-table loading: the driver's TPC-H-ish parquet tables by name.
 
-One place so every operator query sees the same catalog. Reads are plain
+One place so every operator query sees the same tables. Reads are plain
 ``spark.read.parquet`` — Catalyst pushes filters/column pruning into the
 scan (verify with ``.explain``: PushedFilters / ReadSchema).
 """
@@ -9,16 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

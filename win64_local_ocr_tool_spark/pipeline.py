@@ -12,12 +12,15 @@ The Spark restatement of the reference's flagship flow
                    partition_key (dynamic overwrite = idempotent
                    per-partition rerun), counting n_rows/n_errors and a
                    content fingerprint per key while the rows are written
-                ── lineage append: (stage, partition_key, n_rows,
-                   n_errors, wall_ms, 'done', run_id, ts, fp)
+                ── lineage append on the driver (pyarrow, no Spark
+                   job; a temporary file renamed into place):
+                   (stage, partition_key, n_rows, n_errors, wall_ms,
+                   'done', run_id, ts, fp)
 
-Resume: a fresh invocation with ``resume=True`` drops the rows of the
-lineage done-keys and recomputes only missing partitions; output
-idempotence comes from partition-directory overwrite.
+Resume: a fresh invocation with ``resume=True`` reads the lineage
+done-keys on the driver (``lineage.read_done``), filters their rows out
+and recomputes only missing partitions; output idempotence comes from
+partition-directory overwrite.
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions 
 from .lineage import (
     append_lineage,
     content_fingerprint,
-    done_keys,
+    read_done,
     read_lineage,
     row_hash,
     straggler_report,
@@ -48,7 +51,6 @@ STRAGGLER_X1000 = 10_000
 
 
 def commit_stage(
-    spark: SparkSession,
     stage: str,
     build,
     write,
@@ -65,8 +67,12 @@ def commit_stage(
     fingerprint (sum of ``lineage.row_hash``) while the rows are written;
     then one lineage row per key is appended with the wall time of build
     + write (``build`` is a thunk: some stage bodies do eager checkpoint
-    work). ``key`` names a row's lineage key (default 0, one key for the
-    table; NULL counts nowhere). A key with no rows logs n_rows=0, or it
+    work). The append is ``append_lineage`` called through this module's
+    global: the rows go to the driver-side Arrow writer as they are, no
+    Spark job, and its file is renamed into place only after ``write``
+    returned, so a logged key's output is complete. ``key`` names a
+    row's lineage key (default 0, one key for the table; NULL counts
+    nowhere). A key with no rows logs n_rows=0, or it
     would stay todo and every resume would re-run it. Nothing is read
     back. Returns ([(key, n_rows, n_errors, fp)], wall_ms)."""
     key = F.lit(0) if key is None else key
@@ -87,13 +93,7 @@ def commit_stage(
     got = obs.get
     rows = [(k, got[f"n{k}"], got[f"e{k}"], got[f"f{k}"] or 0) for k in keys]
     if lineage_dir:
-        append_lineage(
-            spark, lineage_dir, stage,
-            spark.createDataFrame(
-                rows, "partition_key int, n_rows long, n_errors long, fp long"
-            ),
-            wall_ms, run_id,
-        )
+        append_lineage(lineage_dir, stage, rows, wall_ms, run_id)
     return rows, wall_ms
 
 
@@ -214,9 +214,9 @@ def run_extraction(
     n_pruned = 0
     done_before: set[int] = set()
     if resume and lineage_dir:
-        done = done_keys(spark, lineage_dir, STAGE_EXTRACT)
-        if done is not None:
-            done_before = {r["partition_key"] for r in done.collect()}
+        done_before = {
+            r["partition_key"] for r in read_done(lineage_dir, STAGE_EXTRACT) or ()
+        }
         n_pruned = len(done_before)
         if done_before:
             docs = docs.filter(~F.col("partition_key").isin(*done_before))
@@ -277,7 +277,7 @@ def run_extraction(
     for keys in groups:
         subset = docs if len(groups) == 1 else docs.filter(pk.isin(*keys))
         rows, wall_ms = commit_stage(
-            spark, STAGE_EXTRACT, lambda: extract(subset, keys),
+            STAGE_EXTRACT, lambda: extract(subset, keys),
             # single upsert seam shared with the staged pipeline: Iceberg
             # overwritePartitions when a catalog is configured, dynamic
             # parquet partition-overwrite otherwise (staged.merge_by_key)
@@ -381,7 +381,7 @@ def run_crawl_to_corpus(
     )
     # counted while written; no lineage: curation reruns from the table
     rows, _ = commit_stage(
-        spark, "corpus", lambda: curate_documents(spark, docs_dir, benchmark_dir),
+        "corpus", lambda: curate_documents(spark, docs_dir, benchmark_dir),
         lambda df: df.write.mode("overwrite").parquet(f"{work_dir}/corpus"),
         [0],
     )
@@ -490,17 +490,13 @@ def run_curation_staged(
     if resume:
         if not lineage_dir:
             raise ValueError("resume=True requires lineage_dir")
-        lin = read_lineage(spark, lineage_dir)
-        if lin is not None:
-            marks = lin.filter(
-                (F.col("status") == "done") & F.col("stage").startswith("curate_")
-            ).select("ts", "run_id", "stage", "n_rows", "fp")
-            done_stages = {
-                name[len("curate_"):]: (n, fp)
-                for _, _, name, n, fp in sorted(
-                    marks.collect(), key=lambda r: (r["ts"], r["run_id"] or "")
-                )
-            }
+        marks = sorted(
+            (r for r in read_done(lineage_dir) or () if r["stage"].startswith("curate_")),
+            key=lambda r: (r["ts"], r["run_id"] or ""),
+        )
+        done_stages = {
+            r["stage"][len("curate_"):]: (r["n_rows"], r["fp"]) for r in marks
+        }
 
     state = {"dirty": False}  # a recompute invalidates later stages
 
@@ -527,7 +523,7 @@ def run_curation_staged(
             # mid-overwrite left a partial/divergent table): fall through
         state["dirty"] = True
         rows, wall_ms = commit_stage(
-            spark, f"curate_{name}", df_thunk,
+            f"curate_{name}", df_thunk,
             lambda df: df.write.mode("overwrite").parquet(path),
             [0], lineage_dir=lineage_dir, run_id=run_id,
         )

@@ -269,13 +269,13 @@ def run_staged_extraction(
     def run_stage(stage, source, body, target, key, errors):
         # resume drops the done keys' rows; returns (keys pruned, rows
         # of the stage's whole output, keys committed now)
-        done = done_counts(spark, lineage_dir, stage) if resume else {}
+        done = done_counts(lineage_dir, stage) if resume else {}
         keys = [k for k in range(n_buckets) if k not in done]
         todo = source.filter(~pk.isin(*done)) if done else source
         rows = []
         if keys:
             rows, _ = commit_stage(
-                spark, stage,
+                stage,
                 lambda: with_partition_key(body(todo), n_buckets),
                 lambda df: merge_by_key(df, target),
                 keys, key=key, errors=errors, lineage_dir=lineage_dir,

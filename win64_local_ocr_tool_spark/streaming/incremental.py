@@ -81,9 +81,7 @@ def incremental_extraction(
         # epoch's done-row is appended only after its write finished, so
         # a logged epoch is complete — skip its write and its
         # (non-idempotent) lineage append
-        if lineage_dir and int(epoch_id) in done_counts(
-            bspark, lineage_dir, STAGE_STREAM
-        ):
+        if lineage_dir and int(epoch_id) in done_counts(lineage_dir, STAGE_STREAM):
             return
         docs = batch.select("url", "html")
         if skip_seen_urls:
@@ -103,7 +101,7 @@ def incremental_extraction(
             except AnalysisException:
                 pass  # first epoch: nothing written yet
         commit_stage(
-            bspark, STAGE_STREAM, lambda: extract_all(docs, mega_bytes=mega_bytes),
+            STAGE_STREAM, lambda: extract_all(docs, mega_bytes=mega_bytes),
             # overwrite-by-epoch = idempotent replay (see module docstring)
             lambda df: df.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}"),
             [int(epoch_id)], key=F.lit(int(epoch_id)),

@@ -159,6 +159,52 @@ def test_staged_rerun_is_deterministic(spark, staged, tmp_path):
     assert a.equals(b)
 
 
+# Spark jobs of a fresh run over this fixture: a reopened stage table
+# (one schema-inference job) or one more CC round raises it
+STAGED_JOBS = 40
+
+
+def test_fresh_run_infers_only_its_inputs(spark, staged, tmp_path, monkeypatch):
+    """Every later stage reads the table an earlier stage wrote through
+    the schema it was written with, so a fresh run infers the schema of
+    its two input tables only, and its Spark-job count stays pinned."""
+    from pyspark.sql import DataFrameReader
+
+    root, stats = staged
+    inferred = []
+    schema, parquet = DataFrameReader.schema, DataFrameReader.parquet
+
+    def spy_schema(self, s):
+        self.user_schema = True
+        return schema(self, s)
+
+    def spy_parquet(self, *paths, **kw):
+        if not getattr(self, "user_schema", False):
+            inferred.extend(paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "schema", spy_schema)
+    monkeypatch.setattr(DataFrameReader, "parquet", spy_parquet)
+    sc = spark.sparkContext
+    sc.setJobGroup("staged_fresh", "fresh run_curation_staged")
+    try:
+        again = run_curation_staged(
+            spark, SF, str(tmp_path / "work"),
+            benchmark_dir=str(root / "bench"),
+            lineage_dir=str(tmp_path / "lineage"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    monkeypatch.undo()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("staged_fresh"))
+    assert sorted(inferred) == sorted(
+        [f"{SF}/documents.parquet", f"{root / 'bench'}/documents.parquet"]
+    )
+    assert again["n_corpus"] == stats["n_corpus"]
+    assert n_jobs <= STAGED_JOBS, n_jobs
+
+
 def _corpus_fingerprint(spark, work):
     return sorted(
         (r["doc_id"], r["text"])

@@ -1,7 +1,8 @@
 """Lineage commit markers written on the driver: a directory mixing the
 Spark-written files of earlier versions with Arrow-written ones reads
-the same through both readers, a failed rename publishes nothing, and a
-stage commit runs no Spark job beyond its write."""
+the same through both readers, a failed rename publishes nothing and
+leaves no temporary file, and a stage commit runs no Spark job beyond
+its write."""
 
 import datetime
 import time
@@ -91,8 +92,8 @@ def test_failed_rename_publishes_nothing(spark, tmp_path, monkeypatch):
         append_lineage(lin, "extract", [(0, 99, 0, 1)], 7)
     monkeypatch.undo()
 
-    # the written file exists only under its hidden temporary name
-    assert [p.name for p in (tmp_path / "lin").glob(".*.parquet.tmp")]
+    # the failed append removed its hidden temporary file
+    assert not list((tmp_path / "lin").glob(".*.tmp"))
     assert sorted(p.name for p in (tmp_path / "lin").glob("*.parquet")) == files
     assert (_spark_rows(spark, lin), _arrow_rows(lin)) == before
     assert done_counts(lin, "extract") == {0: 10, 1: 20}

@@ -24,6 +24,7 @@ re-running a partition replaces exactly its directory.
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import os
 import urllib.parse
@@ -236,7 +237,9 @@ def append_lineage(
     the file lands as ``.part-<uuid>.parquet.tmp`` (every reader skips a
     leading ``.``) and is then renamed to ``part-<uuid>.parquet``. So
     the commit marker exists only after the stage's write returned, and
-    no reader sees half a file. The path goes through
+    no reader sees half a file. A write or rename that raises deletes
+    the temporary file before the error propagates, so a leftover one
+    means a process died mid-append. The path goes through
     ``pyarrow.fs.FileSystem.from_uri``, so one code path serves local
     paths and object-store URIs; only the local file system is tested.
     """
@@ -255,5 +258,10 @@ def append_lineage(
     fs.create_dir(path, recursive=True)
     name = f"part-{uuid.uuid4().hex}.parquet"
     tmp = f"{path}/.{name}.tmp"
-    pq.write_table(table, tmp, filesystem=fs)
-    fs.move(tmp, f"{path}/{name}")
+    try:
+        pq.write_table(table, tmp, filesystem=fs)
+        fs.move(tmp, f"{path}/{name}")
+    except BaseException:
+        with contextlib.suppress(OSError):  # write_table may not have made it
+            fs.delete_file(tmp)
+        raise

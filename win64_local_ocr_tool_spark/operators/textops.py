@@ -636,26 +636,20 @@ def dedup_components(spark, sf_dir):
     Implementation is iterative min-label propagation — the canonical
     large-scale CC algorithm on Spark: per round, each doc takes the min
     of its own label and its neighbors' labels; converges in <= graph
-    diameter rounds (near-dup clusters are shallow). Three scale musts,
-    all here: ``localCheckpoint`` truncates the growing lineage every
-    round (else the plan doubles per iteration); the convergence flag
-    is a ``count_if`` observed on the frame that checkpoint materializes,
-    so testing it costs no job of its own; and it counts a ``chg`` flag
-    computed inside the label-update select itself — fusing it saves a
-    labels-vs-labels join (one shuffle) per round.
+    diameter rounds (near-dup clusters are shallow). Four scale musts,
+    all here: the undirected edge list is one ``inline`` of each pair
+    both ways, repartitioned by ``doc_b`` with no fixed count, so AQE
+    sizes the (near-dup-only, tiny) graph from the bytes it shuffles
+    and no count of the pair list runs; labels start at propagation
+    round 1 (each doc's min over itself and its neighbours, one
+    aggregate over the edges), not at an identity pass;
+    ``localCheckpoint`` truncates the growing lineage every round (else
+    the plan doubles per iteration); and the convergence flag is a
+    ``count_if`` of a ``chg`` flag computed inside the label-update
+    select and observed on the frame that checkpoint materializes, so
+    testing it costs no job and no labels-vs-labels join of its own.
     DuckDB twin: recursive-CTE transitive closure.
     """
-    # Size-aware parallelism for the iteration: the candidate-pair graph
-    # is orders of magnitude smaller than the corpus (only near-dup
-    # members appear), so inheriting the corpus partition count makes
-    # every round pay ~corpus-width task overhead on near-empty
-    # partitions. Count the (half-size) pair list once on its own
-    # checkpoint, then build the undirected edge list directly into the
-    # right partition count — ONE resident copy of the edge table, not a
-    # superseded checkpoint pinned beside its repartitioned twin. This
-    # is the "repartition the contracted graph" step a 10^12-doc CC run
-    # performs between rounds; the count is exact, so the result is
-    # unaffected.
     return _cc_from_pairs(dedup_lsh_pairs(spark, sf_dir))
 
 
@@ -664,21 +658,16 @@ def _cc_from_pairs(pairs_df):
     the compute body of ``dedup_components``, factored so the staged
     curation runner can feed it a MATERIALIZED pairs parquet. All the
     scale clauses documented on ``dedup_components`` live here."""
-    pairs = pairs_df.localCheckpoint()
-    n_part = max(2, min(512, 2 * pairs.count() // 500_000 + 1))
+    swap = F.struct(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     edges = (
-        pairs.union(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        )
-        .repartition(n_part, "doc_b")
+        pairs_df.select(F.inline(F.array(F.struct("doc_a", "doc_b"), swap)))
+        .repartition("doc_b")
         .localCheckpoint()
     )
     labels = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("component", F.col("doc_id"))
+        edges.groupBy("doc_a")
+        .agg(F.least("doc_a", F.min("doc_b")).alias("component"))
+        .withColumnRenamed("doc_a", "doc_id")
         .localCheckpoint()
     )
     while True:
@@ -981,7 +970,13 @@ def boilerplate_scrub_chunks(spark, sf_dir):
     travels. n_units comes narrow from the source row (ceil of the
     word count), not from a second aggregate over the exploded
     table."""
-    d = load(spark, sf_dir, "documents")
+    return _scrub_from_docs(load(spark, sf_dir, "documents"))
+
+
+def _scrub_from_docs(d):
+    """Boilerplate-scrub compute body over an arbitrary documents
+    DataFrame — factored so the staged curation runner can feed it the
+    canonical table it just wrote."""
     w = F.col("w")
     idx = F.sequence(
         F.lit(0).cast("long"),

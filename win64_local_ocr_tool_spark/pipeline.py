@@ -25,6 +25,7 @@ partition-directory overwrite.
 
 from __future__ import annotations
 
+import functools
 import time
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
@@ -440,11 +441,15 @@ def run_curation_staged(
     only split eval grams, never create them).
 
     Scale notes: sig/pairs/components reuse the registry operators'
-    compute bodies (same banding, df caps, checkpointed CC rounds); the
-    final assembly joins the scrubbed table to the canonical table on
-    doc_id (at deployment scale both stage tables are bucketed by
-    doc_id so this join is co-located); kill-lists (dup drops,
-    contaminated ids) broadcast into anti-joins against one scan.
+    compute bodies (same banding, df caps, checkpointed CC rounds). Each
+    stage's table is handed forward: later stages read the parquet this
+    run wrote, reopened with the schema it was written with, so a run
+    infers the schema of its input tables only. The final assembly joins
+    the scrubbed table to the canonical table on doc_id (at deployment
+    scale both stage tables are bucketed by doc_id so this join is
+    co-located); kill-lists (dup drops, contaminated ids) anti-join
+    against one scan, with the join strategy left to AQE: a broadcast
+    while they are small, a shuffle join once they grow with the corpus.
 
     Resume (stage-granular twin of ``run_extraction``'s
     partition-granular resume): the lineage done-row is the stage's
@@ -471,9 +476,9 @@ def run_curation_staged(
         QUALITY_STOPWORDS,
         _cc_from_pairs,
         _pairs_from_sig,
+        _scrub_from_docs,
         _sig_from_docs,
         _word_ngrams,
-        boilerplate_scrub_chunks,
     )
     from .operators.tables import load
 
@@ -499,6 +504,12 @@ def run_curation_staged(
         }
 
     state = {"dirty": False}  # a recompute invalidates later stages
+    # stage name -> its table, handed to every later stage: one this run
+    # wrote is reopened with the schema it was written with (no schema
+    # inference job), a skipped one is the table its validation opened
+    tables: dict[str, DataFrame] = {}
+    # opened on first use: a fully resumed run never touches its input
+    documents = functools.cache(lambda: load(spark, docs_dir, "documents"))
 
     def stage(name: str, df_thunk, path: str) -> int:
         # df_thunk is a THUNK: several compute bodies run eager
@@ -517,14 +528,19 @@ def run_curation_staged(
             except Exception:
                 ok = False  # unreadable/missing table -> recompute
             if ok:
+                tables[name] = tbl
                 stats["stages"][name] = {"rows": n, "wall_ms": 0, "resumed": True}
                 return n
             # stale marker (e.g. a later non-resume rerun SIGKILLed
             # mid-overwrite left a partial/divergent table): fall through
         state["dirty"] = True
+
+        def write(df):
+            df.write.mode("overwrite").parquet(path)
+            tables[name] = spark.read.schema(df.schema).parquet(path)
+
         rows, wall_ms = commit_stage(
-            f"curate_{name}", df_thunk,
-            lambda df: df.write.mode("overwrite").parquet(path),
+            f"curate_{name}", df_thunk, write,
             [0], lineage_dir=lineage_dir, run_id=run_id,
         )
         n = rows[0][1]
@@ -538,9 +554,7 @@ def run_curation_staged(
     # can skew-split) — deliberately NOT a window min, which would sink
     # the whole megacluster into one unsplittable reducer partition
     def _exact():
-        d = load(spark, docs_dir, "documents").select(
-            "doc_id", F.md5("text").alias("fp")
-        )
+        d = documents().select("doc_id", F.md5("text").alias("fp"))
         reps = d.groupBy("fp").agg(
             F.min("doc_id").alias("representative")
         )
@@ -553,55 +567,42 @@ def run_curation_staged(
         # at deployment scale where both tables are bucketed by doc_id;
         # the rep set is O(distinct docs), so never broadcast)
         reps = (
-            spark.read.parquet(f"{work_dir}/exact")
+            tables["exact"]
             .filter(F.col("doc_id") == F.col("representative"))
             .select("doc_id")
         )
-        return load(spark, docs_dir, "documents").join(reps, "doc_id")
+        return documents().join(reps, "doc_id")
 
-    stage(
-        "minhash_sig",
-        lambda: _sig_from_docs(_reps()),
-        f"{work_dir}/sig",
-    )
+    stage("minhash_sig", lambda: _sig_from_docs(_reps()), f"{work_dir}/sig")
     stage(
         "lsh_pairs",
-        lambda: _pairs_from_sig(spark.read.parquet(f"{work_dir}/sig")),
+        lambda: _pairs_from_sig(tables["minhash_sig"]),
         f"{work_dir}/pairs",
     )
     stage(
         "components",
-        lambda: _cc_from_pairs(spark.read.parquet(f"{work_dir}/pairs")),
+        lambda: _cc_from_pairs(tables["lsh_pairs"]),
         f"{work_dir}/components",
     )
 
     # canonical: the dedup payoff materialized as a full documents
-    # table — keep exact representatives (equi-join on the exact map),
-    # minus near-dup non-canonical reps (tiny CC kill-list, broadcast
-    # into an anti-join). One corpus scan; the stage dir follows the
-    # <dir>/documents.parquet layout so the downstream operators run
-    # over it unchanged.
+    # table — exact representatives minus near-dup non-canonical reps
+    # (the CC kill-list, anti-joined). One corpus scan; the stage dir
+    # follows the <dir>/documents.parquet layout, so the registry
+    # operators run over it unchanged.
     def _canonical():
-        comp = spark.read.parquet(f"{work_dir}/components")
+        comp = tables["components"]
         dup_drops = comp.filter(
             F.col("doc_id") != F.col("component")
         ).select("doc_id")
-        return (
-            load(spark, docs_dir, "documents")
-            .join(
-                spark.read.parquet(f"{work_dir}/exact").filter(
-                    F.col("doc_id") == F.col("representative")
-                ).select("doc_id"),
-                "doc_id",
-            )
-            .join(F.broadcast(dup_drops), "doc_id", "left_anti")
-        )
+        return _reps().join(dup_drops, "doc_id", "left_anti")
 
-    canon_dir = f"{work_dir}/canonical"
-    stage("canonical", _canonical, f"{canon_dir}/documents.parquet")
+    stage("canonical", _canonical, f"{work_dir}/canonical/documents.parquet")
     if benchmark_dir is not None:
 
         def _contaminated():
+            # forced broadcast: bounded by the size of the eval suite,
+            # whatever the size of the corpus
             bench = (
                 _word_ngrams(
                     load(spark, benchmark_dir, "documents"), DECON_W, "g"
@@ -613,8 +614,7 @@ def run_curation_staged(
             # nothing, and only the (deduped) contaminated doc_id set
             # survives — see decontaminate_ngram's docstring
             corpus_grams = _word_ngrams(
-                load(spark, canon_dir, "documents"), DECON_W, "g",
-                distinct=False,
+                tables["canonical"], DECON_W, "g", distinct=False,
             ).select("doc_id", F.md5("g").alias("h"))
             return (
                 corpus_grams.join(F.broadcast(bench), "h")
@@ -625,22 +625,21 @@ def run_curation_staged(
         stage("decontaminate", _contaminated, f"{work_dir}/contaminated")
     stage(
         "scrub",
-        lambda: boilerplate_scrub_chunks(spark, canon_dir),
+        lambda: _scrub_from_docs(tables["canonical"]),
         f"{work_dir}/scrubbed",
     )
 
     # final assembly: quality gate over scrubbed text, kill-lists
-    # broadcast-anti-joined against the one scan
+    # anti-joined against the one scan
     def _final():
-        scrubbed = spark.read.parquet(f"{work_dir}/scrubbed")
-        langs = load(spark, canon_dir, "documents").select("doc_id", "lang")
+        langs = tables["canonical"].select("doc_id", "lang")
         words = F.split("cleaned", " ")
         n_words = F.size(words)
         n_stop = F.size(
             F.filter(words, lambda x: x.isin(*QUALITY_STOPWORDS))
         )
         final = (
-            scrubbed.join(langs, "doc_id")
+            tables["scrub"].join(langs, "doc_id")
             .select(
                 "doc_id", "lang", F.col("cleaned").alias("text"),
                 n_words.alias("n_words"), n_stop.alias("n_stop"),
@@ -657,8 +656,7 @@ def run_curation_staged(
             .select("doc_id", "lang", "n_words", "text")
         )
         if benchmark_dir is not None:
-            cont = spark.read.parquet(f"{work_dir}/contaminated")
-            final = final.join(F.broadcast(cont), "doc_id", "left_anti")
+            final = final.join(tables["decontaminate"], "doc_id", "left_anti")
         return final
 
     n_final = stage("final_corpus", _final, f"{work_dir}/corpus")

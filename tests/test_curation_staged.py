@@ -162,15 +162,16 @@ def test_staged_rerun_is_deterministic(spark, staged, tmp_path):
 # Spark jobs of a fresh run over this fixture: a reopened stage table
 # (one schema-inference job) or one more CC round raises it
 STAGED_JOBS = 40
+# Spark jobs of a no-op resume: one fingerprint aggregate per stage
+RESUME_NOOP_JOBS = 16
 
 
-def test_fresh_run_infers_only_its_inputs(spark, staged, tmp_path, monkeypatch):
-    """Every later stage reads the table an earlier stage wrote through
-    the schema it was written with, so a fresh run infers the schema of
-    its two input tables only, and its Spark-job count stays pinned."""
+def _jobs_and_inferences(spark, monkeypatch, name, job):
+    """Run ``job()`` under Spark job group ``name``; return its result,
+    its Spark-job count and the paths it read without a user schema
+    (each a schema-inference job)."""
     from pyspark.sql import DataFrameReader
 
-    root, stats = staged
     inferred = []
     schema, parquet = DataFrameReader.schema, DataFrameReader.parquet
 
@@ -183,21 +184,32 @@ def test_fresh_run_infers_only_its_inputs(spark, staged, tmp_path, monkeypatch):
             inferred.extend(paths)
         return parquet(self, *paths, **kw)
 
-    monkeypatch.setattr(DataFrameReader, "schema", spy_schema)
-    monkeypatch.setattr(DataFrameReader, "parquet", spy_parquet)
     sc = spark.sparkContext
-    sc.setJobGroup("staged_fresh", "fresh run_curation_staged")
-    try:
-        again = run_curation_staged(
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameReader, "schema", spy_schema)
+        m.setattr(DataFrameReader, "parquet", spy_parquet)
+        sc.setJobGroup(name, name)
+        try:
+            result = job()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(name)), inferred
+
+
+def test_fresh_run_infers_only_its_inputs(spark, staged, tmp_path, monkeypatch):
+    """Every later stage reads the table an earlier stage wrote through
+    the schema it was written with, so a fresh run infers the schema of
+    its two input tables only, and its Spark-job count stays pinned."""
+    root, stats = staged
+    again, n_jobs, inferred = _jobs_and_inferences(
+        spark, monkeypatch, "staged_fresh",
+        lambda: run_curation_staged(
             spark, SF, str(tmp_path / "work"),
             benchmark_dir=str(root / "bench"),
             lineage_dir=str(tmp_path / "lineage"),
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    monkeypatch.undo()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("staged_fresh"))
+        ),
+    )
     assert sorted(inferred) == sorted(
         [f"{SF}/documents.parquet", f"{root / 'bench'}/documents.parquet"]
     )
@@ -212,22 +224,29 @@ def _corpus_fingerprint(spark, work):
     )
 
 
-def test_resume_noop_skips_every_stage(spark, staged):
+def test_resume_noop_skips_every_stage(spark, staged, monkeypatch):
     """Full lineage present -> resume recomputes nothing and the corpus
     is untouched (the extraction resume-no-op twin, stage-granular).
     The input dirs passed here DO NOT EXIST: stage bodies are thunks
     evaluated only for uncommitted stages, so a fully-resumed run must
     never construct a plan over (or even look at) the source tables —
     several compute bodies run eager localCheckpoint work at plan-build
-    time, which the thunking exists to avoid."""
+    time, which the thunking exists to avoid. Each skipped stage takes
+    its schema and row count from its footers on the driver, so the
+    resume infers no schema and runs only the fingerprint scans."""
     root, stats = staged
     before = _corpus_fingerprint(spark, str(root / "work"))
-    again = run_curation_staged(
-        spark, str(root / "DOES-NOT-EXIST"), str(root / "work"),
-        benchmark_dir=str(root / "ALSO-NOT-THERE"),
-        lineage_dir=str(root / "lineage"),
-        resume=True,
+    again, n_jobs, inferred = _jobs_and_inferences(
+        spark, monkeypatch, "staged_noop",
+        lambda: run_curation_staged(
+            spark, str(root / "DOES-NOT-EXIST"), str(root / "work"),
+            benchmark_dir=str(root / "ALSO-NOT-THERE"),
+            lineage_dir=str(root / "lineage"),
+            resume=True,
+        ),
     )
+    assert inferred == []
+    assert n_jobs <= RESUME_NOOP_JOBS, n_jobs
     assert all(s.get("resumed") for s in again["stages"].values())
     assert all(s["wall_ms"] == 0 for s in again["stages"].values())
     assert {k: v["rows"] for k, v in again["stages"].items()} == {
@@ -481,3 +500,58 @@ def test_resume_detects_content_change_outside_key_column(
     doc_ids but a changed ``representative`` column fails validation
     too."""
     _resume_after_shifting_exact(spark, staged, tmp_path, "representative", 1)
+
+
+def _truncate_a_part(table):
+    part = sorted(table.glob("part-*"))[0]
+    part.write_bytes(part.read_bytes()[: part.stat().st_size // 2])
+
+
+def _rewrite_with_pyarrow(table):
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    # the read keeps Spark's footer key as schema metadata; drop it
+    data = pq.read_table(str(table)).replace_schema_metadata()
+    shutil.rmtree(table)
+    table.mkdir()
+    pq.write_table(data, str(table / "part-00000.parquet"))
+
+
+def _keep_only_success(table):
+    for f in table.iterdir():
+        if f.name != "_SUCCESS":
+            f.unlink()
+
+
+@pytest.mark.parametrize(
+    "damage", [_keep_only_success, _rewrite_with_pyarrow, _truncate_a_part],
+)
+def test_resume_recomputes_a_stage_without_a_valid_footer(
+    spark, staged, tmp_path, damage
+):
+    """A skipped stage's schema and row count come from its parquet
+    footers; a table with no data file, with files that lack Spark's
+    schema key (written by pyarrow, same rows) or with a truncated part
+    file fails validation: the stage recomputes, the recompute cascades
+    to every later stage, and the corpus equals the fixture's."""
+    import shutil
+
+    root, _stats = staged
+    work2, lin2 = tmp_path / "work", tmp_path / "lineage"
+    shutil.copytree(root / "work", work2)
+    shutil.copytree(root / "lineage", lin2)
+    damage(work2 / "components")
+
+    again = run_curation_staged(
+        spark, SF, str(work2),
+        benchmark_dir=str(root / "bench"),
+        lineage_dir=str(lin2),
+        resume=True,
+    )
+    resumed = {k for k, v in again["stages"].items() if v.get("resumed")}
+    assert resumed == {"exact", "minhash_sig", "lsh_pairs"}
+    assert _corpus_fingerprint(spark, str(work2)) == _corpus_fingerprint(
+        spark, str(root / "work")
+    )

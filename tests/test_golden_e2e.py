@@ -83,6 +83,7 @@ def _grouped_run(spark, tmp_path, monkeypatch, name, **kw):
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(name))
     got = spark.read.parquet(str(tmp_path / name)).drop("partition_key")
     return plans, n_jobs, got.toPandas()
@@ -121,4 +122,25 @@ def test_probe_plans_chunk_branch_only_for_the_mega_group(
         spark, tmp_path, monkeypatch, "probe_mega", mega_bytes=sizes[997]
     )
     assert ["Exchange" in p for p in plans] == [key < 4, key >= 4]
+    _assert_matches_golden(got, golden)
+
+
+def test_resume_runs_at_most_three_spark_jobs(
+    spark, golden, tmp_path, monkeypatch, stopped_job
+):
+    """A resume decides on the driver what to skip: after a job stopped
+    at its first of two commit groups, the resume runs the size probe
+    and the one missing group's write (no lineage report job, no re-split
+    of the remaining keys), at most 3 Spark jobs, and its output is
+    golden."""
+    stopped_job(1, lambda: run_extraction(
+        spark, corpus_df(spark, N), out_dir=str(tmp_path / "resume"),
+        lineage_dir=str(tmp_path / "resume_lin"), n_buckets=8,
+        commit_batches=2,
+    ))
+    plans, n_jobs, got = _grouped_run(
+        spark, tmp_path, monkeypatch, "resume", resume=True
+    )
+    assert len(plans) == 1
+    assert n_jobs <= 3, n_jobs
     _assert_matches_golden(got, golden)

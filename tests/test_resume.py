@@ -4,6 +4,7 @@ analog of the reference's idempotent per-page rewrite,
 ``segment_from_point_clusters.py:372-373``)."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from win64_local_ocr_tool_spark.corpus import corpus_df
@@ -229,8 +230,106 @@ def test_straggler_keys_from_lineage_report(spark, tmp_path):
     counts = [(k, 5000 if k == 3 else 50, 0) for k in range(8)]
     append_lineage(lin_dir, "extract", counts, wall_ms=10)
     assert STRAGGLER_X1000 == 10_000  # 5000 vs p50=50 -> 100x -> flagged
-    assert _straggler_keys(spark, lin_dir, {}) == {3}
-    assert _straggler_keys(spark, None, {}) == set()
+    assert _straggler_keys(lin_dir, {}) == {3}
+    assert _straggler_keys(None, {}) == set()
+
+
+def _report_keys(spark, lin_dir, n_buckets):
+    """The extract keys ``straggler_report`` flags at/over STRAGGLER_X1000
+    when it ranks every key."""
+    from win64_local_ocr_tool_spark.lineage import read_lineage, straggler_report
+    from win64_local_ocr_tool_spark.pipeline import STRAGGLER_X1000, STAGE_EXTRACT
+
+    rep = straggler_report(read_lineage(spark, lin_dir), top_k=n_buckets).filter(
+        (F.col("stage") == STAGE_EXTRACT) & (F.col("skew_x1000") >= STRAGGLER_X1000)
+    )
+    return {r["partition_key"] for r in rep.collect()}
+
+
+def test_straggler_keys_match_the_lineage_report(spark, tmp_path):
+    """The driver-side lineage signal of ``_straggler_keys`` flags the
+    same keys as ``straggler_report`` over all keys, on seeded lineage
+    with several runs, keys logged again by later runs, keys logged twice
+    in one append (a tie on ts), empty keys and another stage's rows."""
+    import random
+    import time
+
+    from win64_local_ocr_tool_spark.lineage import append_lineage
+    from win64_local_ocr_tool_spark.pipeline import _straggler_keys
+
+    n_buckets = 16
+    for seed in range(5):
+        rng = random.Random(f"stragglers:{seed}")
+        lin_dir = str(tmp_path / f"lin{seed}")
+
+        def n_rows():
+            return rng.choice([0, rng.randint(1, 80), rng.randint(500, 4000)])
+
+        for run in range(3):
+            keys = rng.sample(range(n_buckets), rng.randint(4, n_buckets))
+            keys += rng.sample(keys, 2)  # logged twice in one append
+            append_lineage(
+                lin_dir, "extract", [(k, n_rows(), 0) for k in keys],
+                wall_ms=rng.randint(1, 9), run_id=f"run{run}",
+            )
+            time.sleep(0.002)
+        append_lineage(lin_dir, "curate_exact", [(0, 9000, 0)], wall_ms=1)
+        want = _report_keys(spark, lin_dir, n_buckets)
+        assert _straggler_keys(lin_dir, {}) == want, seed
+
+
+def test_straggler_keys_flag_every_skewed_partition(spark, tmp_path):
+    """Six partitions at 100x the median are all flagged; the report's
+    default top 5, the signal's earlier source, would drop one."""
+    from win64_local_ocr_tool_spark.lineage import (
+        append_lineage,
+        read_lineage,
+        straggler_report,
+    )
+    from win64_local_ocr_tool_spark.pipeline import _straggler_keys
+
+    lin_dir = str(tmp_path / "lin")
+    fat = {1, 4, 6, 9, 12, 15}
+    append_lineage(
+        lin_dir, "extract", [(k, 5000 if k in fat else 50, 0) for k in range(16)],
+        wall_ms=10,
+    )
+    assert _straggler_keys(lin_dir, {}) == fat == _report_keys(spark, lin_dir, 16)
+    assert len(straggler_report(read_lineage(spark, lin_dir)).collect()) == 5
+
+
+@pytest.mark.parametrize("resume_batches, groups_left", [(2, 1), (3, 2)])
+def test_resume_reruns_only_the_uncommitted_groups(
+    spark, tmp_path, stopped_job, resume_batches, groups_left
+):
+    """Commit groups are fixed over the keyspace: a job stopped after
+    group 1 of 2 resumes with the one missing group (keys 8-15) instead
+    of a fresh split of what is left; a resume with another
+    ``commit_batches`` cuts its own groups over the same keyspace and
+    still converges to the golden output, each key done once."""
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    docs = corpus_df(spark, N)
+
+    def job(batches, resume=False):
+        return run_extraction(
+            spark, docs, out_dir=out, lineage_dir=lin, n_buckets=N_BUCKETS,
+            commit_batches=batches, resume=resume,
+        )
+
+    stopped_job(1, lambda: job(2))
+    stats = job(resume_batches, resume=True)
+    assert stats["pruned_partitions"] == 8
+    assert stats["n_partitions"] == 8
+    assert stats["commit_groups"] == groups_left
+
+    done = spark.read.parquet(lin).filter("status = 'done'").toPandas()
+    assert sorted(done["partition_key"]) == list(range(N_BUCKETS))
+    cols = ["url", "status", "extracted_text", "lang"]
+    got = spark.read.parquet(out).select(*cols).toPandas()
+    pd.testing.assert_frame_equal(
+        got.sort_values("url").reset_index(drop=True),
+        golden_pandas(N)[cols].sort_values("url").reset_index(drop=True),
+    )
 
 
 def test_write_time_counters_equal_output_read_back(spark, tmp_path):

@@ -14,8 +14,8 @@ table is a directory of parquet files with the same semantics
 any run logged it done). A commit's 1-16 rows are written on the driver
 with pyarrow (``append_lineage``: a hidden temporary file renamed into
 place, so a reader never sees half a file), not as a Spark job; the
-resume paths read them back on the driver too (``read_done``), and
-``read_lineage`` is the Spark reader for ``straggler_report``. Stage
+resume paths read them and stage footers on the driver too, and
+``read_lineage`` serves only the registry's ``straggler_report``. Stage
 OUTPUT idempotence comes from dynamic partition overwrite keyed by the
 deterministic ``partition_key`` (the analog of the reference's
 rm-then-rewrite per page, ``segment_from_point_clusters.py:372-373``) —
@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import contextlib
 import datetime
+import json
 import os
 import urllib.parse
 import uuid
@@ -36,6 +37,7 @@ import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 # The lineage table's one schema. ``ts`` is UTC microseconds: Spark
 # reads it as its timestamp, and a Spark-written INT96 ``ts`` (read by
@@ -75,12 +77,12 @@ def read_lineage(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
     return spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_dir)
 
 
-def _filesystem(lineage_dir: str) -> tuple[pafs.FileSystem, str]:
+def _filesystem(path: str) -> tuple[pafs.FileSystem, str]:
     # a path without a scheme is local and may be relative (``jobs
     # --lineage``); from_uri wants it absolute
-    if not urllib.parse.urlparse(lineage_dir).scheme:
-        lineage_dir = os.path.abspath(lineage_dir)
-    return pafs.FileSystem.from_uri(lineage_dir)
+    if not urllib.parse.urlparse(path).scheme:
+        path = os.path.abspath(path)
+    return pafs.FileSystem.from_uri(path)
 
 
 def _dataset(lineage_dir: str) -> ds.Dataset | None:
@@ -214,6 +216,20 @@ def content_fingerprint(df: DataFrame) -> int:
     a count-equal but content-different table must not be reused)."""
     fp = df.select(F.sum(row_hash(df))).first()[0]
     return int(fp or 0)
+
+
+def table_footers(path: str) -> tuple[StructType, int]:
+    """Spark schema (the JSON Spark's writer keeps in each footer) and row
+    count of the parquet table at ``path``, from its visible files' footers
+    on the driver; raises on no file, a bad footer, or no single schema."""
+    fs, root = _filesystem(path)
+    metas = [f.metadata for f in ds.dataset(root, filesystem=fs).get_fragments()]
+    key = b"org.apache.spark.sql.parquet.row.metadata"
+    schemas = {(m.metadata or {}).get(key) for m in metas}
+    if len(schemas) != 1 or None in schemas:
+        raise ValueError(f"{path}: no single Spark schema in its footers")
+    schema = StructType.fromJson(json.loads(schemas.pop()))
+    return schema, sum(m.num_rows for m in metas)
 
 
 def append_lineage(

@@ -26,6 +26,7 @@ partition-directory overwrite.
 from __future__ import annotations
 
 import functools
+import itertools
 import time
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
@@ -33,10 +34,10 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions 
 from .lineage import (
     append_lineage,
     content_fingerprint,
+    done_counts,
     read_done,
-    read_lineage,
     row_hash,
-    straggler_report,
+    table_footers,
     with_partition_key,
 )
 from .operators.extract import extract_all
@@ -44,10 +45,9 @@ from .staged import merge_by_key
 
 STAGE_EXTRACT = "extract"
 
-# a partition at/over this integer skew ratio vs the p50 (the
-# straggler_report convention: ratio * 1000) is a straggler: its
-# documents route through the distributed chunk path at a finer
-# byte threshold instead of re-running as one fat in-task unit
+# a partition at/over this skew vs the p50, per mille (``skewed``), is
+# a straggler: its documents route through the distributed chunk path
+# at a finer byte threshold instead of re-running as one fat unit
 STRAGGLER_X1000 = 10_000
 
 
@@ -117,42 +117,30 @@ def _bucket_sizes(docs: DataFrame) -> dict[int, tuple[int, int]]:
     return {int(k): (int(m), int(s)) for k, m, s in agg.collect()}
 
 
+def skewed(sizes: dict[int, int]) -> set[int]:
+    """Keys at/over STRAGGLER_X1000 per mille of the discrete p50 (rank
+    ceil(n/2), floored at 1): ``straggler_report``'s skew rule."""
+    ranked = sorted(sizes.values())
+    med = max(ranked[-(-len(ranked) // 2) - 1], 1) if ranked else 1
+    return {k for k, v in sizes.items() if v * 1000 >= STRAGGLER_X1000 * med}
+
+
 def _straggler_keys(
-    spark: SparkSession,
     lineage_dir: str | None,
     bucket_sizes: dict[int, tuple[int, int]],
 ) -> set[int]:
     """Partitions to route through the chunk path on resume (r4 verdict
-    item 3 — the straggler report becomes actionable). Two signal
-    sources, union:
+    item 3): the union of two ``skewed`` signals, read on the driver:
 
-    - LINEAGE: ``straggler_report`` rows for the extract stage at/over
-      STRAGGLER_X1000 — partitions a prior epoch observed fat (an
-      incremental re-run over the same key space hits them again);
+    - LINEAGE: the extract stage's latest n_rows per key (``done_counts``,
+      ``straggler_report``'s tie rule) — partitions a prior epoch observed
+      fat (an incremental re-run over the same key space hits them again);
     - INPUT BYTES: the size probe's (``_bucket_sizes``) per-partition
       sums over the REMAINING docs (a killed run's fat partition has no
-      lineage row — but its input size is known before any work);
-      discrete median by explicit rank (the straggler_report
-      convention).
+      lineage row — but its input size is known before any work).
     """
-    fat: set[int] = set()
-    if lineage_dir:
-        lin = read_lineage(spark, lineage_dir)
-        if lin is not None:
-            rep = straggler_report(lin).filter(
-                (F.col("stage") == STAGE_EXTRACT)
-                & (F.col("skew_x1000") >= STRAGGLER_X1000)
-            )
-            fat |= {int(r["partition_key"]) for r in rep.collect()}
-    if bucket_sizes:
-        by_size = sorted(b for _, b in bucket_sizes.values())
-        med = max(by_size[-(-len(by_size) // 2) - 1], 1)
-        fat |= {
-            pk
-            for pk, (_, b) in bucket_sizes.items()
-            if b * 1000 >= STRAGGLER_X1000 * med
-        }
-    return fat
+    fat = skewed(done_counts(lineage_dir, STAGE_EXTRACT)) if lineage_dir else set()
+    return fat | skewed({k: b for k, (_, b) in bucket_sizes.items()})
 
 
 def run_extraction(
@@ -190,19 +178,20 @@ def run_extraction(
     sums for its straggler split; without a probe it plans the split
     for every key.
 
-    ``commit_batches=K``: process the bucket keyspace in K groups, each
-    written AND lineage-logged before the next starts — a SIGKILLed job
-    loses at most the in-flight group instead of the whole run (the
+    ``commit_batches=K``: K groups of ceil(n_buckets/K) keys, fixed over
+    the keyspace, each written AND lineage-logged before the next starts
+    — a SIGKILLed job loses at most the in-flight group (the
     partition-granular kill/resume the north rule demands; tested with
-    a real SIGKILL in tests/test_kill_resume.py). A group is one
-    ``commit_stage``: one write job and one lineage append, its per-key
-    counters observed during the write, never read back. The source is scanned
-    once per group when it isn't physically partitioned by the key —
-    on a production Iceberg table bucketed by hash(url) each group
-    prunes to its own files.
+    a real SIGKILL in tests/test_kill_resume.py), and a resume drops the
+    done keys, so it reruns only the groups that are missing. A group is
+    one ``commit_stage``: one write job and one lineage append, its
+    per-key counters observed during the write, never read back. The
+    source is scanned once per group when it isn't physically
+    partitioned by the key — on a production Iceberg table bucketed by
+    hash(url) each group prunes to its own files.
 
     ``split_stragglers`` (resume runs with ``mega_bytes`` set): flagged
-    straggler partitions (``_straggler_keys`` — lineage skew report +
+    straggler partitions (``_straggler_keys`` — lineage row-count skew +
     the probe's input-bytes skew over the remaining work) route through
     the distributed chunk path at the finer ``straggler_mega_bytes``
     threshold (default mega_bytes/8) instead of re-running as one fat
@@ -212,15 +201,10 @@ def run_extraction(
     """
     docs = with_partition_key(docs, n_buckets)
 
-    n_pruned = 0
-    done_before: set[int] = set()
-    if resume and lineage_dir:
-        done_before = {
-            r["partition_key"] for r in read_done(lineage_dir, STAGE_EXTRACT) or ()
-        }
-        n_pruned = len(done_before)
-        if done_before:
-            docs = docs.filter(~F.col("partition_key").isin(*done_before))
+    resumed = resume and lineage_dir
+    done_before = set(done_counts(lineage_dir, STAGE_EXTRACT)) if resumed else set()
+    if done_before:
+        docs = docs.filter(~F.col("partition_key").isin(*done_before))
 
     # keep the ingest-metadata column when the source recorded it — the
     # mega/normal split then prunes on it at scan level (extract_all)
@@ -230,7 +214,7 @@ def run_extraction(
 
     split = resume and split_stragglers and mega_bytes is not None
     sizes = _bucket_sizes(docs) if out_dir is not None or split else None
-    fat_keys = _straggler_keys(spark, lineage_dir, sizes) if split else set()
+    fat_keys = _straggler_keys(lineage_dir, sizes) if split else set()
     fine_mega = straggler_mega_bytes or max((mega_bytes or 0) // 8, 64 << 10)
 
     def plan(sel, keys, mega):
@@ -263,15 +247,14 @@ def run_extraction(
     if out_dir is None:
         return {
             "extracted": extract(docs, range(n_buckets)),
-            "pruned_partitions": n_pruned,
+            "pruned_partitions": len(done_before),
             "straggler_split_partitions": sorted(fat_keys),
         }
 
-    # bucket groups: one group = one write+lineage commit unit
+    # one group = one write+lineage commit unit (fixed over the keyspace)
     todo_keys = [k for k in range(n_buckets) if k not in done_before]
-    k_groups = max(1, min(commit_batches or 1, len(todo_keys) or 1))
-    step = -(-len(todo_keys) // k_groups) if todo_keys else 1
-    groups = [todo_keys[i : i + step] for i in range(0, len(todo_keys), step)]
+    step = -(-n_buckets // max(1, min(commit_batches or 1, n_buckets)))
+    groups = [list(g) for _, g in itertools.groupby(todo_keys, lambda k: k // step)]
 
     n_docs = n_errors = wall_total = 0
     pk = F.col("partition_key")
@@ -295,7 +278,7 @@ def run_extraction(
         "n_docs": int(n_docs),
         "n_errors": int(n_errors),
         "n_partitions": len(todo_keys),
-        "pruned_partitions": n_pruned,
+        "pruned_partitions": len(done_before),
         "commit_groups": len(groups),
         "wall_ms": wall_total,
         "straggler_split_partitions": sorted(fat_keys),
@@ -462,15 +445,16 @@ def run_curation_staged(
     trusted blindly: a LATER non-resume rerun into the same work_dir
     killed mid-overwrite leaves a corrupt stage table while the first
     run's marker still exists, so a skipped stage is VALIDATED against
-    its marker (footer-only row count == the latest done-row's n_rows
-    AND ``content_fingerprint``, a sum of whole-row hashes, == the
-    ``fp`` that ``commit_stage`` observed while writing the table;
-    unreadable or mismatched -> recompute), and any recompute CASCADES
-    to every later stage. Markers from earlier versions hold a crc of
-    the first column, never match, and so recompute their stage once
-    (the safe direction). Engine-agnostic: no reliance on parquet
-    ``_SUCCESS`` files, so stage tables can move behind the Iceberg
-    ``merge_by_key`` seam unchanged."""
+    its marker (row count and schema from its footers, on the driver:
+    count == the latest done-row's n_rows AND ``content_fingerprint``, a
+    sum of whole-row hashes, == the ``fp`` that ``commit_stage`` observed
+    while writing the table; a missing, unreadable or schema-less footer
+    or a mismatch -> recompute), and any recompute CASCADES to every
+    later stage. Markers from earlier versions hold a crc of the first
+    column, never match, and so recompute their stage once (the safe
+    direction). Engine-agnostic: no reliance on parquet ``_SUCCESS``
+    files, so stage tables can move behind the Iceberg ``merge_by_key``
+    seam unchanged."""
     from .operators.textops import (
         DECON_W,
         QUALITY_STOPWORDS,
@@ -518,8 +502,8 @@ def run_curation_staged(
         if name in done_stages and not state["dirty"]:
             want_n, want_fp = done_stages[name]
             try:
-                tbl = spark.read.parquet(path)
-                n = tbl.count()  # footer-only
+                schema, n = table_footers(path)
+                tbl = spark.read.schema(schema).parquet(path)
                 # marker fp NULL (pre-fingerprint lineage row) degrades
                 # to count-only validation; otherwise one table scan
                 ok = n == want_n and (

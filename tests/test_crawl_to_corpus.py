@@ -1,9 +1,13 @@
 """The chained crawl-to-corpus flow: extraction output feeds the
 curation family unchanged, deterministically."""
 
+import pytest
+from pyspark.sql import functions as F
+
 from win64_local_ocr_tool_spark.pipeline import (
     extracted_to_documents,
     run_crawl_to_corpus,
+    run_curation_staged,
 )
 
 
@@ -47,27 +51,91 @@ def test_extracted_to_documents_shape(spark):
     assert all(r["n_chars"] == len(r["text"]) for r in rows)
 
 
-def test_curate_benchmark_gate_is_explicit(spark, tmp_path):
+@pytest.fixture(scope="module")
+def crawl(spark, tmp_path_factory):
+    """One crawl-to-corpus run over 300 synthetic pages, no benchmark."""
+    from win64_local_ocr_tool_spark.corpus import corpus_df
+
+    root = tmp_path_factory.mktemp("crawl")
+    stats = run_crawl_to_corpus(
+        spark, corpus_df(spark, 300), str(root / "run"), n_buckets=8
+    )
+    return root, stats
+
+
+def _rows(spark, corpus_dir):
+    df = spark.read.parquet(corpus_dir)
+    return df.columns, sorted(map(tuple, df.collect()))
+
+
+def test_curate_benchmark_gate_is_explicit(spark, crawl, tmp_path):
     """With no benchmark table the chain must NOT sacrifice the
     doc_id % 29 slice (the registry oracle's synthetic convention);
     decontaminating against the corpus's own docs table must drop
-    essentially every long doc (every 13-gram self-overlaps)."""
-    from win64_local_ocr_tool_spark.corpus import corpus_df
-    from win64_local_ocr_tool_spark.operators.textops import curate_documents
-    from win64_local_ocr_tool_spark.pipeline import run_crawl_to_corpus
-
-    stats = run_crawl_to_corpus(
-        spark, corpus_df(spark, 300), str(tmp_path / "run"), n_buckets=8
+    every doc that passes the gate (every 13-gram self-overlaps)."""
+    _root, stats = crawl
+    _cols, plain = _rows(spark, stats["corpus_dir"])
+    assert len(plain) == stats["n_corpus_docs"] > 0
+    assert any(r[0] % 29 == 0 for r in plain)
+    selfdecon = run_curation_staged(
+        spark, stats["docs_dir"], str(tmp_path / "self"),
+        benchmark_dir=stats["docs_dir"],
     )
-    plain = curate_documents(spark, stats["docs_dir"]).collect()
-    assert len(plain) == stats["n_corpus_docs"]
-    # no-benchmark curation keeps doc_id % 29 == 0 rows (the old chain
-    # silently dropped them)
-    assert any(r["doc_id"] % 29 == 0 for r in plain)
-    selfdecon = curate_documents(
-        spark, stats["docs_dir"], benchmark_dir=stats["docs_dir"]
+    assert selfdecon["n_corpus"] == 0  # every kept doc >= 20 words
+
+
+def test_documents_commit_through_the_seam(spark, crawl):
+    """The documents table is a lineage-committed stage beside the
+    extraction and curation markers, in one lineage dir."""
+    from win64_local_ocr_tool_spark.lineage import read_done
+
+    root, stats = crawl
+    done = {r["stage"]: r for r in read_done(str(root / "run/lineage"))}
+    n_docs = spark.read.parquet(
+        f"{stats['docs_dir']}/documents.parquet"
     ).count()
-    assert selfdecon == 0  # every kept doc >= 20 words self-overlaps
+    assert done["documents"]["n_rows"] == n_docs
+    assert {s for s in done if s.startswith("curate_")} == {
+        f"curate_{s}" for s in (
+            "exact", "minhash_sig", "lsh_pairs", "components",
+            "canonical", "scrub", "final_corpus",
+        )
+    }
+    assert done["curate_final_corpus"]["n_rows"] == stats["n_corpus_docs"]
+
+
+@pytest.mark.parametrize("with_benchmark", [False, True])
+def test_pipeline_corpus_equals_curate_staged(
+    spark, crawl, tmp_path, with_benchmark
+):
+    """``jobs pipeline`` (run_crawl_to_corpus) and ``jobs curate-staged``
+    (run_curation_staged) build the same corpus from the same
+    documents: same rows, same columns, text included."""
+    from win64_local_ocr_tool_spark.corpus import corpus_df
+
+    _root, stats = crawl
+    bench = None
+    if with_benchmark:
+        # eval suite: five docs that survive curation without one
+        _cols, plain = _rows(spark, stats["corpus_dir"])
+        picked = [r[0] for r in plain[:5]]
+        bench = str(tmp_path / "bench")
+        spark.read.parquet(f"{stats['docs_dir']}/documents.parquet").filter(
+            F.col("doc_id").isin(*picked)
+        ).write.parquet(f"{bench}/documents.parquet")
+        stats = run_crawl_to_corpus(
+            spark, corpus_df(spark, 300), str(tmp_path / "run"),
+            n_buckets=8, benchmark_dir=bench,
+        )
+        assert 0 < stats["n_corpus_docs"] <= len(plain) - 5
+    staged = run_curation_staged(
+        spark, stats["docs_dir"], str(tmp_path / "staged"),
+        benchmark_dir=bench,
+    )
+    cols, got = _rows(spark, stats["corpus_dir"])
+    assert cols == ["doc_id", "lang", "n_words", "text"]
+    assert (cols, got) == _rows(spark, f"{tmp_path}/staged/corpus")
+    assert len(got) == stats["n_corpus_docs"] == staged["n_corpus"]
 
 
 def test_null_html_rows_survive_as_rows(spark):

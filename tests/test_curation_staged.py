@@ -317,10 +317,10 @@ def test_real_sigkill_then_staged_resume_converges(spark, tmp_path):
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     work, lin = str(tmp_path / "work"), str(tmp_path / "lineage")
 
-    def cmd(resume):
+    def cmd(resume, workdir=work):
         return [
             sys.executable, "-m", "win64_local_ocr_tool_spark.jobs",
-            "curate-staged", "--input", SF, "--workdir", work,
+            "curate-staged", "--input", SF, "--workdir", workdir,
             "--lineage", lin, "--master", "local[4]",
         ] + (["--resume"] if resume else [])
 
@@ -353,6 +353,8 @@ def test_real_sigkill_then_staged_resume_converges(spark, tmp_path):
         cmd(True), env=env, capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-2000:]
+    # a stage commit (the single-key observe) builds no 0 == 0 predicate
+    assert "trivially true" not in out.stderr
     stats = json.loads(out.stdout.strip().splitlines()[-1])
     resumed = {k for k, v in stats["stages"].items() if v.get("resumed")}
     if killed:
@@ -360,8 +362,16 @@ def test_real_sigkill_then_staged_resume_converges(spark, tmp_path):
     else:
         assert len(resumed) == len(stats["stages"])
 
-    # converged corpus == an uninterrupted run's
-    clean = run_curation_staged(spark, SF, str(tmp_path / "work_clean"))
+    # converged corpus == an uninterrupted run's; that run commits
+    # every stage, so its stderr check cannot pass vacuously
+    clean_out = subprocess.run(
+        cmd(False, str(tmp_path / "work_clean")), env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert clean_out.returncode == 0, clean_out.stderr[-2000:]
+    assert "trivially true" not in clean_out.stderr
+    clean = json.loads(clean_out.stdout.strip().splitlines()[-1])
+    assert not any(v.get("resumed") for v in clean["stages"].values())
     assert stats["n_corpus"] == clean["n_corpus"]
     got = _corpus_fingerprint(spark, work)
     want = _corpus_fingerprint(spark, str(tmp_path / "work_clean"))

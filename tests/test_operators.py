@@ -162,41 +162,6 @@ def test_entry_smoke(spark):
     assert set(df.columns) >= {"url", "status", "extracted_text", "spans", "lang"}
 
 
-def test_curate_cli_matches_registry_query(spark, sf_dir, tmp_path):
-    """`jobs curate` is the training_corpus_final composition as a
-    spark-submit surface: its parquet output must equal the registry
-    query row-for-row."""
-    import json
-    import subprocess
-    import sys
-
-    out = str(tmp_path / "curated")
-    proc = subprocess.run(
-        [
-            sys.executable,
-            "-m",
-            "win64_local_ocr_tool_spark.jobs",
-            "curate",
-            "--input",
-            sf_dir,
-            "--output",
-            out,
-            "--master",
-            "local[4]",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    stats = json.loads(proc.stdout.strip().splitlines()[-1])
-    expected = entry.queries()["training_corpus_final"](spark, sf_dir)
-    exp_rows = sorted(map(tuple, expected.collect()))
-    got_rows = sorted(map(tuple, spark.read.parquet(out).collect()))
-    assert stats["n_docs_kept"] == len(exp_rows)
-    assert got_rows == exp_rows
-
-
 def test_approx_distinct_accuracy(spark, sf_dir):
     """The HLL++ estimate must sit within 5% of the exact distinct count
     for every group (rsd was configured at 0.01)."""

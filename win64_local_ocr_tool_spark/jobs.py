@@ -2,10 +2,10 @@
 ``routes.py:38-349`` -> spark-submit CLIs, SURVEY S12).
 
 Commands: ``extract`` (byte-identical extraction, partition-granular
-resume), ``curate`` (one-pass training-corpus materialization),
-``curate-staged`` (same chain as checkpointed stage tables with
-lineage commit markers + stage-granular --resume), ``pipeline``
-(crawl -> extraction -> curation as one job), ``stream`` (incremental
+resume), ``curate-staged`` (training-corpus curation as checkpointed
+stage tables with lineage commit markers + stage-granular --resume),
+``pipeline`` (crawl -> extraction -> the same curation chain as one
+job; curation reruns in full on --resume), ``stream`` (incremental
 Structured-Streaming ingest), ``stream-neardup`` (incremental near-dup
 dedup: the foreachBatch LSH upsert over arriving documents).
 
@@ -52,17 +52,6 @@ def _build_parser() -> argparse.ArgumentParser:
                          "killed job loses at most one group")
     ex.add_argument("--master", default=None)
 
-    cu = sub.add_parser(
-        "curate",
-        help="materialize the final training corpus: near-dup "
-             "canonicalized, benchmark-decontaminated, quality-gated "
-             "(the training_corpus_final composition)",
-    )
-    cu.add_argument("--input", required=True,
-                    help="directory containing documents.parquet")
-    cu.add_argument("--output", required=True)
-    cu.add_argument("--master", default=None)
-
     cs = sub.add_parser(
         "curate-staged",
         help="curation as staged jobs (sig -> pairs -> CC -> canonical "
@@ -91,7 +80,8 @@ def _build_parser() -> argparse.ArgumentParser:
     pl.add_argument("--synthetic", type=int, default=None,
                     help="generate N synthetic pages instead of --input")
     pl.add_argument("--workdir", required=True,
-                    help="stage root: extracted/, lineage/, docs/, corpus/")
+                    help="stage root: extracted/, lineage/, docs/, the "
+                         "curation stage tables, corpus/")
     pl.add_argument("--benchmark", default=None,
                     help="directory holding the eval-suite "
                          "documents.parquet to decontaminate against "
@@ -133,30 +123,6 @@ def main(argv: list[str] | None = None) -> int:
     from .corpus import corpus_df
     from .pipeline import run_extraction
     from .session import get_spark
-
-    if args.cmd == "curate":
-        from .operators.tables import load
-        from .operators.textops import training_corpus_final
-
-        spark = get_spark("curate-job", master=args.master)
-        try:
-            training_corpus_final(spark, args.input).write.mode(
-                "overwrite"
-            ).parquet(args.output)
-            n_kept = spark.read.parquet(args.output).count()
-            n_in = load(spark, args.input, "documents").count()
-            print(
-                json.dumps(
-                    {
-                        "out_dir": args.output,
-                        "n_docs_in": n_in,
-                        "n_docs_kept": n_kept,
-                    }
-                )
-            )
-            return 0
-        finally:
-            spark.stop()
 
     if args.cmd == "curate-staged":
         from .pipeline import run_curation_staged

@@ -13,7 +13,7 @@ md5-per-unit hashing cost.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from .lshpairs import bounded_bucket_pairs, bounded_pairs_ctes
 from .registry import query
@@ -723,11 +723,17 @@ def dedup_canonical_docs(spark, sf_dir):
 
 
 # Quality-gate stopword list and thresholds: the single source for BOTH
-# the Spark predicates and every oracle that embeds the gate
-# (training_data_filter, training_corpus_final).
+# the Spark predicate (``quality_gate``) and every oracle that embeds
+# the gate (training_data_filter, training_corpus_final).
 QUALITY_STOPWORDS = (
     "the and of to is in that with for on der die und das ist"
 ).split()
+QUALITY_MIN_WORDS = 20
+QUALITY_MIN_CHARS = 100
+# a doc in these (Latin-script) languages needs >= 1 stopword per
+# QUALITY_WORDS_PER_STOP words
+QUALITY_STOP_LANGS = ("en", "de")
+QUALITY_WORDS_PER_STOP = 10
 _STOP_IN_SQL = ", ".join(f"'{s}'" for s in QUALITY_STOPWORDS)
 _QUALITY_CTES = f"""qfeat AS (
       SELECT doc_id, lang, n_chars,
@@ -739,10 +745,33 @@ _QUALITY_CTES = f"""qfeat AS (
     quality AS (
       SELECT doc_id, lang, n_words
       FROM qfeat
-      WHERE n_words >= 20
-        AND n_chars >= 100
-        AND (lang NOT IN ('en', 'de') OR 10 * n_stop >= n_words)
+      WHERE n_words >= {QUALITY_MIN_WORDS}
+        AND n_chars >= {QUALITY_MIN_CHARS}
+        AND (lang NOT IN ({", ".join(f"'{x}'" for x in QUALITY_STOP_LANGS)})
+             OR {QUALITY_WORDS_PER_STOP} * n_stop >= n_words)
     )"""
+
+
+def quality_gate(df: DataFrame, text: Column, n_chars: Column) -> DataFrame:
+    """The rows of ``df`` (which carries ``lang``) whose ``text`` passes
+    the quality gate, with an ``n_words`` column added: length floors
+    plus a stopword-density floor for Latin-script docs. A narrow
+    filter; Catalyst fuses the predicates into one codegen stage."""
+    words = F.split(text, " ")
+    n_stop = F.size(F.filter(words, lambda x: x.isin(*QUALITY_STOPWORDS)))
+    n_words = F.col("n_words")
+    return (
+        df.select("*", F.size(words).alias("n_words"), n_stop.alias("_n_stop"))
+        .filter(
+            (n_words >= QUALITY_MIN_WORDS)
+            & (n_chars >= QUALITY_MIN_CHARS)
+            & (
+                ~F.col("lang").isin(*QUALITY_STOP_LANGS)
+                | (F.lit(QUALITY_WORDS_PER_STOP) * F.col("_n_stop") >= n_words)
+            )
+        )
+        .drop("_n_stop")
+    )
 
 
 @query(
@@ -751,34 +780,13 @@ _QUALITY_CTES = f"""qfeat AS (
 )
 def training_data_filter(spark, sf_dir):
     """Composite quality gate — the shape of a real training-data
-    filter stage: length floors plus a stopword-density floor for
-    Latin-script docs (gibberish rejection). One scan, all predicates
-    fused by Catalyst into a single whole-stage-codegen filter; at
-    corpus scale this is a pushdown-friendly narrow map, no shuffle."""
+    filter stage (``quality_gate`` over the documents table): one scan,
+    a pushdown-friendly narrow map at corpus scale, no shuffle."""
     from .tables import load as _load
 
     d = _load(spark, sf_dir, "documents")
-    words = F.split("text", " ")
-    stops = QUALITY_STOPWORDS
-    n_words = F.size(words)
-    n_stop = F.size(F.filter(words, lambda x: x.isin(*stops)))
-    return (
-        d.select(
-            "doc_id",
-            "lang",
-            "n_chars",
-            n_words.alias("n_words"),
-            n_stop.alias("n_stop"),
-        )
-        .filter(
-            (F.col("n_words") >= 20)
-            & (F.col("n_chars") >= 100)
-            & (
-                ~F.col("lang").isin("en", "de")
-                | (F.lit(10) * F.col("n_stop") >= F.col("n_words"))
-            )
-        )
-        .select("doc_id", "lang", "n_words")
+    return quality_gate(d, F.col("text"), F.col("n_chars")).select(
+        "doc_id", "lang", "n_words"
     )
 
 
@@ -1061,53 +1069,6 @@ def stratified_sample(spark, sf_dir):
     for k, v in reversed(SAMPLE_RATES.items()):
         rate = F.when(F.col("lang") == k, F.lit(v)).otherwise(rate)
     return d.filter(pref < rate).select("doc_id", "lang")
-
-
-def curate_documents(spark, docs_dir: str, benchmark_dir: str | None = None):
-    """Production curation entry for a REAL documents table: quality
-    gate ∩ dedup-canonical ∩ (optional) decontamination against an
-    EXPLICIT eval-suite table.
-
-    The registry query ``training_corpus_final`` keeps the synthetic
-    in-corpus benchmark convention (``doc_id % BENCH_MOD == 0``) so its
-    DuckDB oracle can reproduce the protocol from the same parquet —
-    but reusing that convention on a real crawl would silently
-    sacrifice an arbitrary 1/BENCH_MOD of perfectly good pages as
-    "the eval set". Here the benchmark is a table the caller supplies
-    (``<benchmark_dir>/documents.parquet``); with none supplied the
-    decontamination gate is simply absent. Same scale shapes as the
-    registry query: broadcast kill-lists against one corpus scan, the
-    bench gram set md5-hashed and broadcast."""
-    comp = dedup_components(spark, docs_dir)
-    dup_drops = comp.filter(
-        F.col("doc_id") != F.col("component")
-    ).select("doc_id")
-    kept = training_data_filter(spark, docs_dir).join(
-        F.broadcast(dup_drops), "doc_id", "left_anti"
-    )
-    if benchmark_dir is not None:
-        bench = (
-            _word_ngrams(
-                load(spark, benchmark_dir, "documents"), DECON_W, "g"
-            )
-            .select(F.md5("g").alias("h"))
-            .distinct()
-        )
-        # corpus stream stays NON-distinct: the broadcast join needs no
-        # shuffle and only contaminated doc_ids (deduped below) matter —
-        # a corpus-wide DISTINCT over raw 13-grams would be the chain's
-        # biggest shuffle for zero semantic effect
-        corpus_grams = _word_ngrams(
-            load(spark, docs_dir, "documents"), DECON_W, "g",
-            distinct=False,
-        ).select("doc_id", F.md5("g").alias("h"))
-        cont = (
-            corpus_grams.join(F.broadcast(bench), "h")
-            .select("doc_id")
-            .distinct()
-        )
-        kept = kept.join(F.broadcast(cont), "doc_id", "left_anti")
-    return kept
 
 
 @query(

@@ -72,11 +72,15 @@ def commit_stage(
     global: the rows go to the driver-side Arrow writer as they are, no
     Spark job, and its file is renamed into place only after ``write``
     returned, so a logged key's output is complete. ``key`` names a
-    row's lineage key (default 0, one key for the table; NULL counts
-    nowhere). A key with no rows logs n_rows=0, or it
-    would stay todo and every resume would re-run it. Nothing is read
-    back. Returns ([(key, n_rows, n_errors, fp)], wall_ms)."""
-    key = F.lit(0) if key is None else key
+    row's lineage key (NULL counts nowhere); without one every row
+    counts toward the single key in ``keys``. A key with no rows logs
+    n_rows=0, or it would stay todo and every resume would re-run it.
+    Nothing is read back. Returns ([(key, n_rows, n_errors, fp)],
+    wall_ms)."""
+
+    def at(k):
+        return F.lit(True) if key is None else key == k
+
     err = F.lit(False) if errors is None else errors
     t0 = time.monotonic()
     df = build()
@@ -85,9 +89,9 @@ def commit_stage(
     write(
         df.observe(
             obs,
-            *(F.count_if(key == k).alias(f"n{k}") for k in keys),
-            *(F.count_if((key == k) & err).alias(f"e{k}") for k in keys),
-            *(F.sum(F.when(key == k, h)).alias(f"f{k}") for k in keys),
+            *(F.count_if(at(k)).alias(f"n{k}") for k in keys),
+            *(F.count_if(at(k) & err).alias(f"e{k}") for k in keys),
+            *(F.sum(F.when(at(k), h)).alias(f"f{k}") for k in keys),
         )
     )
     wall_ms = int((time.monotonic() - t0) * 1000)
@@ -328,28 +332,30 @@ def run_crawl_to_corpus(
     """The full north-star flow as ONE chained job: raw pages ->
     byte-identical extraction (lineage + resume) -> documents-shaped
     stage table -> curated training corpus (near-dup canonicalized,
-    quality-gated, and — when ``benchmark_dir`` supplies an eval-suite
-    documents table — decontaminated against ITS 13-grams).
+    scrubbed, quality-gated, and — when ``benchmark_dir`` supplies an
+    eval-suite documents table — decontaminated against ITS 13-grams).
 
-    Curation goes through ``textops.curate_documents``, NOT the
-    registry's ``training_corpus_final``: that query's synthetic
-    in-corpus benchmark convention (doc_id % 29) exists for its DuckDB
-    oracle and would silently sacrifice an arbitrary 1/29 of a real
-    crawl as "the eval set".
+    Curation is ``run_curation_staged`` over the documents table, with
+    its stage tables under ``work_dir`` (``corpus/`` is the corpus) and
+    its commit markers in the extraction's lineage dir: the same chain
+    ``jobs curate-staged`` runs, so both build the same corpus from the
+    same documents. With no ``benchmark_dir`` nothing is decontaminated
+    (no slice of a real crawl is sacrificed as "the eval set").
 
-    The intermediate lands as ``<work_dir>/docs/documents.parquet`` —
-    the standard curation input layout — so the whole textops family
-    (and its DuckDB oracles) runs unchanged over extraction output.
-    Each half keeps its own failure/restart story: extraction resumes
-    at partition granularity via lineage; curation is a deterministic
-    pure function of the stage table."""
-    from .operators.textops import curate_documents
-
+    The documents table lands as ``<work_dir>/docs/documents.parquet``
+    (the standard curation input layout, so the textops family and its
+    DuckDB oracles run over it unchanged), committed through
+    ``commit_stage`` as stage ``documents``. Extraction resumes at
+    partition granularity; curation reruns in full on every run, resume
+    included: the documents table is rewritten each time and no marker
+    ties a curation stage to the documents it read, so a stage-granular
+    resume here would trust stale tables."""
+    lineage_dir = f"{work_dir}/lineage"
     ext_stats = run_extraction(
         spark,
         docs,
         out_dir=f"{work_dir}/extracted",
-        lineage_dir=f"{work_dir}/lineage",
+        lineage_dir=lineage_dir,
         n_buckets=n_buckets,
         resume=resume,
     )
@@ -360,20 +366,20 @@ def run_crawl_to_corpus(
         spark, f"{work_dir}/extracted", EXTRACTED_SCHEMA + ", partition_key int"
     )
     docs_dir = f"{work_dir}/docs"
-    extracted_to_documents(extracted).write.mode("overwrite").parquet(
-        f"{docs_dir}/documents.parquet"
+    commit_stage(
+        "documents", lambda: extracted_to_documents(extracted),
+        lambda df: df.write.mode("overwrite").parquet(f"{docs_dir}/documents.parquet"),
+        [0], lineage_dir=lineage_dir,
     )
-    # counted while written; no lineage: curation reruns from the table
-    rows, _ = commit_stage(
-        "corpus", lambda: curate_documents(spark, docs_dir, benchmark_dir),
-        lambda df: df.write.mode("overwrite").parquet(f"{work_dir}/corpus"),
-        [0],
+    cur = run_curation_staged(
+        spark, docs_dir, work_dir,
+        benchmark_dir=benchmark_dir, lineage_dir=lineage_dir,
     )
     return {
         **{f"extract_{k}": v for k, v in ext_stats.items()},
         "docs_dir": docs_dir,
         "corpus_dir": f"{work_dir}/corpus",
-        "n_corpus_docs": rows[0][1],
+        "n_corpus_docs": cur["n_corpus"],
     }
 
 
@@ -457,12 +463,12 @@ def run_curation_staged(
     seam unchanged."""
     from .operators.textops import (
         DECON_W,
-        QUALITY_STOPWORDS,
         _cc_from_pairs,
         _pairs_from_sig,
         _scrub_from_docs,
         _sig_from_docs,
         _word_ngrams,
+        quality_gate,
     )
     from .operators.tables import load
 
@@ -617,28 +623,10 @@ def run_curation_staged(
     # anti-joined against the one scan
     def _final():
         langs = tables["canonical"].select("doc_id", "lang")
-        words = F.split("cleaned", " ")
-        n_words = F.size(words)
-        n_stop = F.size(
-            F.filter(words, lambda x: x.isin(*QUALITY_STOPWORDS))
-        )
-        final = (
-            tables["scrub"].join(langs, "doc_id")
-            .select(
-                "doc_id", "lang", F.col("cleaned").alias("text"),
-                n_words.alias("n_words"), n_stop.alias("n_stop"),
-                F.length("cleaned").alias("n_chars"),
-            )
-            .filter(
-                (F.col("n_words") >= 20)
-                & (F.col("n_chars") >= 100)
-                & (
-                    ~F.col("lang").isin("en", "de")
-                    | (F.lit(10) * F.col("n_stop") >= F.col("n_words"))
-                )
-            )
-            .select("doc_id", "lang", "n_words", "text")
-        )
+        final = quality_gate(
+            tables["scrub"].join(langs, "doc_id"),
+            F.col("cleaned"), F.length("cleaned"),
+        ).select("doc_id", "lang", "n_words", F.col("cleaned").alias("text"))
         if benchmark_dir is not None:
             final = final.join(tables["decontaminate"], "doc_id", "left_anti")
         return final

@@ -1,6 +1,8 @@
 """The chained crawl-to-corpus flow: extraction output feeds the
 curation family unchanged, deterministically."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,27 +13,75 @@ from win64_local_ocr_tool_spark.pipeline import (
 )
 
 
-def test_chain_end_to_end_and_deterministic(spark, tmp_path):
-    from win64_local_ocr_tool_spark.corpus import corpus_df
-
-    docs = corpus_df(spark, 400)
-    stats = run_crawl_to_corpus(
-        spark, docs, str(tmp_path / "run1"), n_buckets=8
+def _doc_ids(spark, urls):
+    """The doc_id the chain gives each url, in order."""
+    ok = spark.createDataFrame(
+        [(u, "ok", "", "") for u in urls],
+        "url string, status string, extracted_text string, lang string",
     )
-    assert stats["extract_n_docs"] == 400
+    return [r["doc_id"] for r in extracted_to_documents(ok).collect()]
+
+
+def _one_word_changed(html):
+    return re.sub(r"<p>\w+", "<p>planted", bytes(html).decode(), count=1).encode()
+
+
+def test_chain_end_to_end_and_deterministic(spark, tmp_path):
+    from win64_local_ocr_tool_spark.corpus import (
+        DOCUMENTS_SCHEMA,
+        corpus_df,
+        corpus_pandas,
+    )
+    from win64_local_ocr_tool_spark.operators.extract import extract_all
+
+    # planted near-duplicates: four pages again under another url, one
+    # word changed; the eval suite is the extracted text of two others
+    copies = corpus_pandas([3, 5, 7, 11])
+    originals = list(copies["url"])
+    copies["url"] += "?copy"
+    copies["html"] = copies["html"].map(_one_word_changed)
+    pages = corpus_df(spark, 400).unionByName(
+        spark.createDataFrame(copies, DOCUMENTS_SCHEMA)
+    )
+    eval_urls = list(corpus_pandas([20, 21])["url"])
+    bench = str(tmp_path / "bench")
+    extracted_to_documents(
+        extract_all(pages.filter(F.col("url").isin(*eval_urls)))
+    ).write.parquet(f"{bench}/documents.parquet")
+
+    stats = run_crawl_to_corpus(
+        spark, pages, str(tmp_path / "run1"), n_buckets=8,
+        benchmark_dir=bench,
+    )
+    assert stats["extract_n_docs"] == 404
     # corrupt pages became error rows and never reach curation
     n_docs_stage = spark.read.parquet(
         str(tmp_path / "run1/docs/documents.parquet")
     ).count()
-    assert n_docs_stage == 400 - stats["extract_n_errors"]
-    # the curated corpus is a non-trivial, strict subset (quality gate
-    # + dedup + decontamination all bite on the synthetic mix)
+    assert n_docs_stage == 404 - stats["extract_n_errors"]
+    # the curated corpus is a non-trivial, strict subset, and every
+    # gate bites: quality, near-dup dedup and decontamination
     assert 0 < stats["n_corpus_docs"] < n_docs_stage
+    work = tmp_path / "run1"
+    table = {
+        t: spark.read.parquet(str(work / t)).collect()
+        for t in ("pairs", "components", "contaminated", "corpus")
+    }
+    assert table["pairs"] and table["components"] and table["contaminated"]
+    component = {r["doc_id"]: r["component"] for r in table["components"]}
+    corpus_ids = {r["doc_id"] for r in table["corpus"]}
+    ids = _doc_ids(spark, originals + [u + "?copy" for u in originals])
+    for orig, copy in zip(ids[:4], ids[4:]):
+        assert component[orig] == component[copy] == min(orig, copy)
+        assert max(orig, copy) not in corpus_ids
+    eval_ids = set(_doc_ids(spark, eval_urls))
+    assert eval_ids <= {r["doc_id"] for r in table["contaminated"]}
+    assert not eval_ids & corpus_ids
     # doc_id is a pure function of the url -> rerun over a different
     # partitioning yields the identical corpus
     stats2 = run_crawl_to_corpus(
-        spark, corpus_df(spark, 400).repartition(13),
-        str(tmp_path / "run2"), n_buckets=8,
+        spark, pages.repartition(13), str(tmp_path / "run2"), n_buckets=8,
+        benchmark_dir=bench,
     )
     a = sorted(map(tuple, spark.read.parquet(stats["corpus_dir"]).collect()))
     b = sorted(map(tuple, spark.read.parquet(stats2["corpus_dir"]).collect()))

@@ -7,7 +7,10 @@ completeness, kill-list routing, determinism — not the operators."""
 import duckdb
 import pytest
 
-from win64_local_ocr_tool_spark.pipeline import run_curation_staged
+from win64_local_ocr_tool_spark.pipeline import (
+    run_curation_staged,
+    run_extraction,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -565,3 +568,41 @@ def test_resume_recomputes_a_stage_without_a_valid_footer(
     assert _corpus_fingerprint(spark, str(work2)) == _corpus_fingerprint(
         spark, str(root / "work")
     )
+
+
+def _compiled(spark) -> int:
+    """Classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_jobs_compile_nothing(spark, staged, tmp_path):
+    """Spark's codegen class cache holds a job's whole working set, so
+    a second run of the same job in one session compiles no class.
+    A curation job generates 130 classes: with a cache smaller than
+    that, LRU evicts each class before its next use and every warm job
+    recompiles nearly all of them."""
+    from win64_local_ocr_tool_spark.corpus import corpus_df
+
+    root, _stats = staged
+
+    def curate(run):
+        run_curation_staged(
+            spark, SF, str(tmp_path / run / "work"),
+            benchmark_dir=str(root / "bench"),
+            lineage_dir=str(tmp_path / run / "lineage"),
+        )
+
+    def extract(run):
+        run_extraction(
+            spark, corpus_df(spark, 200),
+            out_dir=str(tmp_path / run / "out"),
+            lineage_dir=str(tmp_path / run / "xlineage"),
+            n_buckets=4,
+        )
+
+    for job in (curate, extract):
+        job("cold")
+        before = _compiled(spark)
+        job("warm")
+        assert _compiled(spark) - before == 0, job.__name__

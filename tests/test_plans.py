@@ -124,9 +124,10 @@ def test_decontaminate_broadcasts_benchmark_grams(spark, sf_dir):
 
 def test_final_corpus_kill_lists_broadcast(spark, sf_dir):
     """training_corpus_final: both kill lists (non-canonical dups,
-    contaminated ids) must broadcast into anti-joins against the one
-    corpus scan — a SortMergeJoin here would mean the corpus side
-    shuffles on doc_id."""
+    contaminated ids) broadcast into anti-joins against the one corpus
+    scan — the contaminated ids unhinted, because the planner sizes
+    them under the threshold, the dup drops through their hint. A
+    SortMergeJoin here would mean the corpus side shuffles on doc_id."""
     plan = _plan(REG["training_corpus_final"](spark, sf_dir))
     # count anti-joins specifically: the decontaminate subtree already
     # contains an inner BroadcastHashJoin, so a bare BHJ count would
@@ -139,6 +140,42 @@ def test_final_corpus_kill_lists_broadcast(spark, sf_dir):
     assert n_anti_bhj >= 2, plan
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
+
+
+def test_kill_list_anti_joins_need_no_broadcast(spark, sf_dir):
+    """The near-dup and contamination drop sets grow with the corpus,
+    so their anti-joins carry no broadcast hint (all but
+    training_corpus_final's dup drops; see its docstring). With
+    broadcasts off the planner shuffles them (SortMergeJoin) and they
+    return the same rows as the broadcast plan."""
+    from win64_local_ocr_tool_spark.streaming.neardup import near_dedup_kept
+
+    docs = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "doc_id long, source string"
+    )
+    comps = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 3)], "doc_id long, component long"
+    )
+    queries = {
+        name: (lambda name=name: REG[name](spark, sf_dir))
+        for name in (
+            "dedup_canonical_docs", "dedup_canonical", "training_corpus_final",
+        )
+    }
+    queries["near_dedup_kept"] = lambda: near_dedup_kept(docs, comps)
+    want = {name: sorted(q().collect()) for name, q in queries.items()}
+    assert [tuple(r) for r in want["near_dedup_kept"]] == [(1, "a"), (3, "c")]
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for name, q in queries.items():
+            df = q()
+            assert any(
+                "SortMergeJoin" in l and "LeftAnti" in l
+                for l in _plan(df).splitlines()
+            ), name
+            assert sorted(df.collect()) == want[name], name
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
 def test_q5_dimension_chain_broadcasts(spark, sf_dir):

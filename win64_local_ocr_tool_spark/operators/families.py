@@ -842,7 +842,7 @@ def dedup_minhash_lsh(spark, sf_dir):
 def dedup_canonical(spark, sf_dir):
     """Near-dup connected components + the canonical-corpus payoff as
     one entry: the ``component`` branch pins the iterative min-label CC
-    labels, the ``kept`` branch pins the broadcast-anti-join corpus
+    labels, the ``kept`` branch pins the anti-joined corpus
     that survives canonicalization. CC runs ONCE and feeds both
     branches. Components: textops.dedup_components/
     dedup_canonical_docs."""
@@ -850,7 +850,7 @@ def dedup_canonical(spark, sf_dir):
     drops = comp.filter(F.col("doc_id") != F.col("component")).select("doc_id")
     kept = (
         load(spark, sf_dir, "documents")
-        .join(F.broadcast(drops), "doc_id", "left_anti")
+        .join(drops, "doc_id", "left_anti")
         .select("doc_id", "source")
     )
     return comp.select(

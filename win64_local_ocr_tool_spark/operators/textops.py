@@ -148,8 +148,11 @@ def dedup_ngram_jaccard(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     sh = _shingles(d).localCheckpoint()
     # df via groupBy (map-side partial agg shrinks the shuffle), then a
-    # broadcast anti-join on the tiny heavy-hitter list — cheaper than a
-    # per-shingle window, which has no partial aggregation
+    # broadcast anti-join on the heavy-hitter list — cheaper than a
+    # per-shingle window, which has no partial aggregation. Forced
+    # broadcast, bounded by construction: each stop shingle stands for
+    # more than SHINGLE_DF_CAP shingle rows, so the list holds under
+    # 1/SHINGLE_DF_CAP of the table it is anti-joined against
     stop = (
         sh.groupBy("shingle")
         .agg(F.count("*").alias("df"))
@@ -708,16 +711,16 @@ def dedup_canonical_docs(spark, sf_dir):
     """The dedup payoff query: materialize the corpus with every near-
     dup cluster collapsed to its canonical (min-id) member — the step
     that actually shrinks a training set. documents LEFT ANTI JOIN the
-    non-canonical ids; the drop set is tiny relative to the corpus, so
-    the anti-join broadcasts and the full table is scanned exactly
-    once."""
+    non-canonical ids, the full table scanned exactly once. The drop
+    set grows with the corpus, so the join strategy is left to AQE: a
+    broadcast while the set is small, a shuffle join once it is not."""
     from .tables import load as _load
 
     comp = dedup_components(spark, sf_dir)
     drops = comp.filter(F.col("doc_id") != F.col("component")).select("doc_id")
     return (
         _load(spark, sf_dir, "documents")
-        .join(F.broadcast(drops), "doc_id", "left_anti")
+        .join(drops, "doc_id", "left_anti")
         .select("doc_id", "source")
     )
 
@@ -813,6 +816,26 @@ _DECON_CTES = f"""grams AS ({_ngrams_sql(DECON_W, "g")}),
     )"""
 
 
+def _decon_hits(corpus: DataFrame, bench: DataFrame) -> DataFrame:
+    """(doc_id, h): one row per DECON_W-gram occurrence in ``corpus``
+    whose md5 ``h`` is also a gram of the eval suite ``bench``. The
+    one gram build behind both decontamination sites (the registry
+    query and the staged chain's ``decontaminate`` stage).
+
+    The benchmark gram set is forced to broadcast: it is bounded by the
+    size of the eval suite, whatever the size of the corpus. The corpus
+    side stays non-distinct and streams through the broadcast hash join
+    with no shuffle; callers dedup the (small) hit set."""
+
+    def hashes(d):
+        return _word_ngrams(d, DECON_W, "g", distinct=False).select(
+            "doc_id", F.md5("g").alias("h")
+        )
+
+    bench_h = hashes(bench).select("h").distinct()
+    return hashes(corpus).join(F.broadcast(bench_h), "h")
+
+
 @query(
     "decontaminate_ngram",
     f"WITH {_DECON_CTES} SELECT doc_id, n_hits FROM cont_hits",
@@ -837,20 +860,12 @@ def decontaminate_ngram(spark, sf_dir):
     comparison ~3-6x (md5 collisions are vanishing at any real
     eval-suite size, and the DuckDB oracle keeps raw-string equality,
     so a collision would surface as a driver mismatch). Emits
-    (doc_id, n_hits) for contaminated docs only; the drop step is a
-    broadcast anti-join of this result, same as dedup_canonical_docs."""
+    (doc_id, n_hits) for contaminated docs only; the drop step is an
+    anti-join of this result, same as dedup_canonical_docs."""
     d = load(spark, sf_dir, "documents")
-    grams = _word_ngrams(d, DECON_W, "g", distinct=False).select(
-        "doc_id", F.md5("g").alias("h")
-    )
-    bench = (
-        grams.filter(F.col("doc_id") % BENCH_MOD == 0)
-        .select("h")
-        .distinct()
-    )
+    in_bench = F.col("doc_id") % BENCH_MOD == 0
     return (
-        grams.filter(F.col("doc_id") % BENCH_MOD != 0)
-        .join(F.broadcast(bench), "h")
+        _decon_hits(d.filter(~in_bench), d.filter(in_bench))
         .groupBy("doc_id")
         .agg(F.countDistinct("h").alias("n_hits"))
     )
@@ -1008,6 +1023,10 @@ def _scrub_from_docs(d):
         .filter(F.col("df") >= SCRUB_MIN_DF)
         .select("h")
     )
+    # forced broadcast, bounded by construction: each heavy key stands
+    # for >= SCRUB_MIN_DF unit rows, so the list holds at most
+    # 1/SCRUB_MIN_DF of the unit table, and in a crawl it is the
+    # boilerplate shared across pages, which grows with sites, not pages
     kept = units.withColumn("h", F.md5("unit")).join(
         F.broadcast(heavy), "h", "left_anti"
     )
@@ -1096,10 +1115,14 @@ def training_corpus_final(spark, sf_dir):
     components are the individually-oracled operators above.
 
     Scale shape: the corpus is scanned ONCE (the quality gate's narrow
-    filter); every exclusion list (dup drops, contaminated ids) is tiny
-    relative to the corpus and broadcast into anti-joins — the same
-    "small kill-lists against one big scan" shape as
-    dedup_canonical_docs, so no corpus-side shuffle at all."""
+    filter) and every exclusion list (dup drops, contaminated ids)
+    anti-joins against that scan — the same shape as
+    dedup_canonical_docs. The contaminated ids carry no hint: the
+    planner sizes them and broadcasts them while they are small. The
+    dup drops keep a forced broadcast for now, with no size bound: they
+    come out of the checkpointed CC rounds, whose estimated size is the
+    product of the rounds' join estimates (8.9e17 bytes for 48 rows at
+    sf0.001), so the planner alone would shuffle the corpus for them."""
     comp = dedup_components(spark, sf_dir)
     dup_drops = comp.filter(
         F.col("doc_id") != F.col("component")
@@ -1109,6 +1132,6 @@ def training_corpus_final(spark, sf_dir):
     return (
         quality.filter(F.col("doc_id") % BENCH_MOD != 0)
         .join(F.broadcast(dup_drops), "doc_id", "left_anti")
-        .join(F.broadcast(cont_drops), "doc_id", "left_anti")
+        .join(cont_drops, "doc_id", "left_anti")
         .select("doc_id", "lang", "n_words")
     )

@@ -462,12 +462,11 @@ def run_curation_staged(
     files, so stage tables can move behind the Iceberg ``merge_by_key``
     seam unchanged."""
     from .operators.textops import (
-        DECON_W,
         _cc_from_pairs,
+        _decon_hits,
         _pairs_from_sig,
         _scrub_from_docs,
         _sig_from_docs,
-        _word_ngrams,
         quality_gate,
     )
     from .operators.tables import load
@@ -591,23 +590,9 @@ def run_curation_staged(
     if benchmark_dir is not None:
 
         def _contaminated():
-            # forced broadcast: bounded by the size of the eval suite,
-            # whatever the size of the corpus
-            bench = (
-                _word_ngrams(
-                    load(spark, benchmark_dir, "documents"), DECON_W, "g"
-                )
-                .select(F.md5("g").alias("h"))
-                .distinct()
-            )
-            # non-distinct corpus stream: broadcast join shuffles
-            # nothing, and only the (deduped) contaminated doc_id set
-            # survives — see decontaminate_ngram's docstring
-            corpus_grams = _word_ngrams(
-                tables["canonical"], DECON_W, "g", distinct=False,
-            ).select("doc_id", F.md5("g").alias("h"))
+            bench = load(spark, benchmark_dir, "documents")
             return (
-                corpus_grams.join(F.broadcast(bench), "h")
+                _decon_hits(tables["canonical"], bench)
                 .select("doc_id")
                 .distinct()
             )

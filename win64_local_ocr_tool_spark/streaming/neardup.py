@@ -121,14 +121,15 @@ def near_dedup_components(
 
 def near_dedup_kept(docs: DataFrame, comps: DataFrame | None) -> DataFrame:
     """The kept (canonical) set: documents minus non-canonical near-dup
-    members — the same broadcast anti-join shape as the batch
-    ``dedup_canonical_docs``."""
+    members — the same anti-join as the batch ``dedup_canonical_docs``,
+    with the join strategy left to AQE (the drop set grows with the
+    stream)."""
     if comps is None:
         return docs.select("doc_id", "source")
     drops = comps.filter(F.col("doc_id") != F.col("component")).select(
         "doc_id"
     )
-    return docs.join(F.broadcast(drops), "doc_id", "left_anti").select(
+    return docs.join(drops, "doc_id", "left_anti").select(
         "doc_id", "source"
     )
 
